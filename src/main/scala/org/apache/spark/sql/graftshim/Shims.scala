@@ -35,4 +35,21 @@ object Shims {
       : Seq[org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(spark)
+
+  /** Same, for the planner strategies an extensions object injects. */
+  def builtPlannerStrategies(
+      ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    ext.buildPlannerStrategies(spark)
+
+  /** A DataFrame over an already-analyzed logical plan — the way a custom
+    * logical node (e.g. graft.plans.Widen) becomes a frame without an
+    * RDD round trip. */
+  def ofRows(
+      spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

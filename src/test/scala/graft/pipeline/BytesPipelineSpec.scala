@@ -4,6 +4,9 @@ import graft.SparkSpec
 import graft.ops.LabelRule
 import graft.pcap.{Fixtures, PcapSource}
 import java.nio.file.Files
+import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** End-to-end flagship test: synthesize a pcap on disk, run the full
   * pipeline, read back both parquet sinks, assert the reference contract
@@ -304,5 +307,73 @@ class BytesPipelineSpec extends SparkSpec {
     val (data4, adv4) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, quiet)
     assert(adv4.isEmpty)
     assert(BytesPipeline.latest(spark, out).contains((data4, None)))
+  }
+
+  private val metaCols = Seq("timestamp", "src_ip", "dst_ip", "src_port", "dst_port", "protocol", "label")
+
+  /** A labeled-features frame shaped like [[BytesPipeline.featuresDf]]'s
+    * output: 7 metadata columns and `features` of `len` floats. Row 3 has
+    * a null `features`, row 2 a null element at index 5, row 4 a null
+    * `dst_ip`. Column order differs from the sink's on purpose. */
+  private def featureFrame(rows: Int, len: Int): DataFrame = {
+    val id = col("id")
+    val vec = transform(sequence(lit(0), lit(len - 1)), i =>
+      when(id === 2 && i === 5, lit(null).cast("float"))
+        .otherwise((((id * 31 + i) % 256) / 255.0).cast("float")))
+    spark.range(rows).select(
+      (id + 0.5).as("timestamp"),
+      when(id === 3, lit(null).cast("array<float>")).otherwise(vec).as("features"),
+      concat(lit("10.0.0."), id).as("src_ip"),
+      when(id === 4, lit(null).cast("string")).otherwise(lit("10.0.9.9")).as("dst_ip"),
+      (id + 1000).as("src_port"), lit(80L).as("dst_port"),
+      when(id % 2 === 0, "6").otherwise("17").as("protocol"),
+      when(id === 1, "dos").otherwise("benign").as("label"))
+  }
+
+  /** The projection the sink used before the native operator: kept here
+    * only as the oracle. */
+  private def getItemWiden(df: DataFrame, width: Int): DataFrame =
+    df.select(metaCols.map(col) ++
+      (0 until width).map(i => col("features").getItem(i).as(s"byte($i)")): _*)
+
+  for (w <- Seq(64, 1525))
+    test(s"native widen equals the getItem projection at width $w (schema, rows, nulls)") {
+      val in = featureFrame(rows = 6, len = w)
+      val got = BytesPipeline.widen(in, w)
+      val want = getItemWiden(in, w)
+      assert(got.schema == want.schema) // names, order, types, nullability
+      assert(got.schema.drop(7).forall(f => f.nullable))
+      assert(got.count() == 6)
+      assert(got.exceptAll(want).isEmpty, "native rows missing from the oracle")
+      assert(want.exceptAll(got).isEmpty, "oracle rows missing from the native widen")
+      val nullVec = got.filter(col("timestamp") === 3.5).head()
+      assert((7 until 7 + w).forall(nullVec.isNullAt), "null features must widen to all-null bytes")
+    }
+
+  test("widen fails loudly on an array whose length is not width") {
+    for (len <- Seq(63, 65)) {
+      val e = intercept[SparkException] {
+        BytesPipeline.widen(featureFrame(rows = 4, len = len), 64)
+          .write.format("noop").mode("overwrite").save()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(s"holds $len elements, expected 64")),
+        s"length $len: ${e.getMessage}")
+    }
+  }
+
+  test("the 1525-wide sinks plan WidenExec and no projection over 100 expressions") {
+    val dir = Files.createTempDirectory("graft-widenplan").toFile
+    dir.deleteOnExit()
+    val pcap = new java.io.File(dir, "cap.pcap")
+    Files.write(pcap.toPath, pcapOf(frames: _*))
+    val plans = SinkPlans.capture(spark) {
+      val (_, adv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out",
+        cfg.copy(width = 1525))
+      assert(adv.isDefined)
+    }
+    assert(plans.count(SinkPlans.hasWiden) == 2, "data and adversarial writes both widen natively")
+    val wide = plans.flatMap(SinkPlans.wideProjects)
+    assert(wide.isEmpty, s"wide projections left in the sink: ${wide.map(_.projectList.size)}")
   }
 }

@@ -30,22 +30,30 @@ class StreamingPipelineSpec extends SparkSpec {
       (100.0, frame("10.0.0.1", "10.0.0.2", 1, 2, 6)),
       (101.0, frame("10.0.0.66", "10.0.0.2", 3, 4, 17)))
 
-    val q = BytesPipeline.runStreaming(spark, watch.getAbsolutePath, out, cfg)
-    try {
-      q.processAllAvailable()
-      val n1 = spark.read.parquet(s"$out/data").count()
-      assert(n1 == 2)
-      assert(spark.read.parquet(s"$out/adversarial").count() == 1)
+    val plans = SinkPlans.capture(spark) {
+      val q = BytesPipeline.runStreaming(spark, watch.getAbsolutePath, out, cfg)
+      try {
+        q.processAllAvailable()
+        val n1 = spark.read.parquet(s"$out/data").count()
+        assert(n1 == 2)
+        assert(spark.read.parquet(s"$out/adversarial").count() == 1)
 
-      drop("b.pcap", (200.0, frame("10.0.0.5", "10.0.0.6", 5, 6, 6)))
-      q.processAllAvailable()
-      val d = spark.read.parquet(s"$out/data")
-      assert(d.count() == 3)
-      assert(d.columns.length == 7 + 32 + 1) // widened + batch_id partition
-      assert(d.select("batch_id").distinct().count() == 2) // one per micro-batch
-      // adversarial unchanged by the benign batch
-      assert(spark.read.parquet(s"$out/adversarial").count() == 1)
-    } finally q.stop()
+        drop("b.pcap", (200.0, frame("10.0.0.5", "10.0.0.6", 5, 6, 6)))
+        q.processAllAvailable()
+        val d = spark.read.parquet(s"$out/data")
+        assert(d.count() == 3)
+        assert(d.columns.length == 7 + 32 + 1) // widened + batch_id partition
+        assert(d.select("batch_id").distinct().count() == 2) // one per micro-batch
+        // adversarial unchanged by the benign batch
+        assert(spark.read.parquet(s"$out/adversarial").count() == 1)
+      } finally q.stop()
+    }
+    // each micro-batch writes both sinks straight from WidenExec: no
+    // projection re-copies the widened rows (e.g. to add batch_id)
+    val sinks = plans.filter(SinkPlans.hasWiden)
+    // data x 2 batches, adversarial for the first batch only
+    assert(sinks.size == 3, s"expected 3 widened writes, got ${sinks.size}")
+    assert(sinks.forall(p => SinkPlans.projectsOverWiden(p).isEmpty))
   }
 
   test("AvailableNow trigger drains the landing zone then terminates on its own") {

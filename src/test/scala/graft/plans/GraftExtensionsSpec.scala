@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * the shared test JVM is not reliable (getOrCreate reuses the active
   * session and ignores builder extensions), so this asserts the
   * extensions contract directly: applying [[GraftExtensions]] yields
-  * exactly the NanosPushdown optimizer rule. Behavior of the rule itself
-  * is covered by NanosPushdownSpec.
+  * the NanosPushdown optimizer rule and the WidenStrategy planner
+  * strategy. Behavior of each is covered by NanosPushdownSpec and
+  * BytesPipelineSpec.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -19,5 +20,13 @@ class GraftExtensionsSpec extends SparkSpec {
     val rules = org.apache.spark.sql.graftshim.Shims.builtOptimizerRules(ext, spark)
     assert(rules.exists(_ eq NanosPushdown),
       s"expected NanosPushdown among injected rules, got: $rules")
+  }
+
+  test("GraftExtensions injects WidenStrategy as a planner strategy") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    val strategies = org.apache.spark.sql.graftshim.Shims.builtPlannerStrategies(ext, spark)
+    assert(strategies.exists(_ eq WidenStrategy),
+      s"expected WidenStrategy among injected strategies, got: $strategies")
   }
 }
