@@ -1,5 +1,6 @@
 package graft.pcap
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,19 +14,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** DataSource V2 pcap connector: `spark.read.format("pcap").load(path)`
+/** DataSource V2 pcap connector: `spark.read.format("pcap").load(paths*)`
   * yields decoded+anonymized packets with the [[Packet]] schema.
   *
-  * This is the SQL-facing integration of the splittable reader
-  * ([[PcapSource]]): planInputPartitions() emits one byte-range
-  * [[PcapInputPartition]] per ~`splitBytes` (chain-resync at range
-  * starts), so a single multi-GB capture parallelizes across executors
-  * with no driver-side data scan — the 100 TB shape the typed API
-  * already has, now reachable from SQL (`CREATE TABLE ... USING pcap`).
+  * The splittable reader: [[PcapSource.packetsSplittable]] (the flagship's
+  * `splittable` mode) calls it, SQL reaches it as `CREATE TABLE ... USING
+  * pcap`. planInputPartitions() emits one byte-range [[PcapInputPartition]]
+  * per ~`splitBytes` of each file ([[PcapSource.planSplits]]), so a
+  * multi-GB capture runs as one task per split with no shuffle and no
+  * driver-side data scan.
   *
-  * Options: `splitBytes` (default 128 MiB). Reference semantics
-  * (/root/reference/BytesProcessor.py:211-268) are inherited from
-  * PacketDecoder — dropped frames simply produce no rows.
+  * Options: `splitBytes` (default 128 MiB, at most
+  * [[PcapSource.MaxSplitBytes]]), `ipv6` (default false). Reference
+  * semantics (BytesProcessor.py:211-268) are inherited from PacketDecoder
+  * — dropped frames simply produce no rows.
   */
 final class PcapDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pcap"
@@ -52,9 +54,11 @@ object PcapTable {
     StructField("payload", BinaryType, nullable = false),
     StructField("label", StringType, nullable = false)))
 
+  /** `load(p)` passes `path`; `load(p1, p2, ...)` passes `paths` as a JSON
+    * array of strings. */
   def paths(properties: util.Map[String, String]): Seq[String] = {
     val o = properties.asScala
-    o.get("paths").map(p => p.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
+    o.get("paths").map(p => new ObjectMapper().readValue(p, classOf[Array[String]]).toSeq)
       .orElse(o.get("path").map(Seq(_)))
       .getOrElse(Seq.empty)
   }
@@ -65,15 +69,12 @@ final class PcapTable(paths: Seq[String]) extends Table with SupportsRead {
   override def schema(): StructType = PcapTable.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PcapScanBuilder(paths,
-      Option(options.get("splitBytes")).map(_.toLong).getOrElse(128L * 1024 * 1024),
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val scan = new PcapScan(paths,
+      Option(options.get("splitBytes")).map(_.toLong).getOrElse(PcapSource.DefaultSplitBytes),
       Option(options.get("ipv6")).exists(_.toBoolean))
-}
-
-final class PcapScanBuilder(paths: Seq[String], splitBytes: Long, ipv6: Boolean)
-    extends ScanBuilder {
-  override def build(): Scan = new PcapScan(paths, splitBytes, ipv6)
+    () => scan
+  }
 }
 
 final case class PcapInputPartition(split: PcapSource.PcapSplit) extends InputPartition

@@ -2,43 +2,38 @@ package graft.pcap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Pcap files -> Dataset[Packet] (reference R1, the driver read loop at
-  * /root/reference/BytesProcessor.py:48-108). Two strategies:
+  * BytesProcessor.py:48-108). Two readers:
   *
-  * 1. [[packets]] — whole-file: `binaryFile` scan + flatMap through
-  *    [[PcapFormat.records]] and [[PacketDecoder.decode]]. One partition
-  *    per file; correct and simple. The reference's explicit
-  *    chunk/pool/gather machinery collapses into Spark partitioning.
+  * 1. [[packets]] and its streaming twin [[packetsStream]] — whole-file:
+  *    `binaryFile` + [[PcapFormat.records]] + [[PacketDecoder.decode]], one
+  *    task per file. A file is one byte array, so at most 2 GiB
+  *    (`spark.sql.sources.binaryFile.maxLength`). The only reader for
+  *    pcapng files that declare interfaces after their first 64 KiB.
   *
-  * 2. [[packetsSplittable]] — the 100 TB path: a multi-GB capture must
-  *    not be one task. Pcap records are self-framing but carry no sync
-  *    marker, so arbitrary byte offsets need resynchronization: each task
-  *    scans forward from its range start for an offset where a CHAIN of k
+  * 2. [[packetsSplittable]] — the 100 TB path, which is the DataSource V2
+  *    [[PcapScan]]: one task per byte-range split from [[planSplits]], no
+  *    shuffle. Pcap records are self-framing but carry no sync marker, so
+  *    arbitrary byte offsets need resynchronization: each task scans
+  *    forward from its range start for an offset where a CHAIN of k
   *    record headers parses with sane lengths/timestamps, which is a
   *    deterministic boundary (false positives must forge k consecutive
   *    plausible headers). Tasks read only their byte range (+ one record
   *    overhang), so a 100 GB file becomes ~800 independent 128 MB tasks
   *    with no driver-side scan — the driver touches metadata and the
-  *    24-byte global header only.
+  *    file head only.
   */
 object PcapSource {
 
-  def rawRecords(spark: SparkSession, paths: Seq[String]): Dataset[PcapRecord] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .flatMap(PcapFormat.records(_))
-  }
+  /** Default byte-range split size of [[planSplits]]. */
+  val DefaultSplitBytes: Long = 128L * 1024 * 1024
 
   def packets(spark: SparkSession, paths: Seq[String],
-              ipv6: Boolean = false): Dataset[Packet] = {
-    import spark.implicits._
-    rawRecords(spark, paths).flatMap(r => PacketDecoder.decode(r.ts, r.frame, ipv6))
-  }
+              ipv6: Boolean = false): Dataset[Packet] =
+    decodeFiles(spark.read.format("binaryFile").load(paths: _*), ipv6)
 
   /** Continuous ingestion: watch a directory for new pcap files and
     * stream their decoded packets (Structured Streaming over the
@@ -49,17 +44,20 @@ object PcapSource {
     */
   def packetsStream(spark: SparkSession, dir: String,
                     maxFilesPerTrigger: Int = 16,
-                    ipv6: Boolean = false): Dataset[Packet] = {
-    import spark.implicits._
-    spark.readStream
+                    ipv6: Boolean = false): Dataset[Packet] =
+    decodeFiles(spark.readStream
       .format("binaryFile")
       .option("pathGlobFilter", "*.pcap*") // .pcap and .pcapng both ingest
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .schema(new org.apache.spark.sql.types.StructType()
         .add("path", "string").add("modificationTime", "timestamp")
         .add("length", "long").add("content", "binary"))
-      .load(dir)
-      .select(col("content")).as[Array[Byte]]
+      .load(dir), ipv6)
+
+  /** `binaryFile` rows -> packets, each file framed whole. */
+  private def decodeFiles(files: DataFrame, ipv6: Boolean): Dataset[Packet] = {
+    import files.sparkSession.implicits._
+    files.select(col("content")).as[Array[Byte]]
       .flatMap(PcapFormat.records(_))
       .flatMap(r => PacketDecoder.decode(r.ts, r.frame, ipv6))
   }
@@ -88,13 +86,23 @@ object PcapSource {
   /** Largest credible captured frame; bounds both resync scanning and the
     * cross-split record overhang. */
   private val MaxFrame = 262144
+  /** Largest credible pcapng block (frame + framing + options slack);
+    * bounds resync scanning and the cross-split overhang. */
+  private val MaxNgBlock = MaxFrame + 4096
+
+  /** Largest split size [[planSplits]] accepts: [[readSplit]] reads a
+    * split plus one record overhang into one byte array. */
+  val MaxSplitBytes: Long = Int.MaxValue - 8L - MaxNgBlock
 
   /** Metadata bytes the driver reads per pcapng file to collect the
     * interface table (SHB + leading IDBs). */
   private val NgHeadBytes = 64 * 1024
 
   def planSplits(spark: SparkSession, paths: Seq[String],
-                 targetSplitBytes: Long = 128L * 1024 * 1024): Seq[PcapSplit] = {
+                 targetSplitBytes: Long = DefaultSplitBytes): Seq[PcapSplit] = {
+    require(targetSplitBytes > 0 && targetSplitBytes <= MaxSplitBytes,
+      s"pcap split size $targetSplitBytes is outside [1, $MaxSplitBytes]: " +
+        "a split and its record overhang are read into one byte array")
     val conf = spark.sparkContext.hadoopConfiguration
     paths.flatMap { p =>
       val hp = new Path(p)
@@ -129,14 +137,14 @@ object PcapSource {
   }
 
   def packetsSplittable(spark: SparkSession, paths: Seq[String],
-                        targetSplitBytes: Long = 128L * 1024 * 1024,
+                        targetSplitBytes: Long = DefaultSplitBytes,
                         ipv6: Boolean = false): Dataset[Packet] = {
     import spark.implicits._
-    val splits = planSplits(spark, paths, targetSplitBytes)
-    spark.createDataset(splits)
-      .repartition(math.max(splits.size, 1))
-      .flatMap(readSplit(_))
-      .flatMap(r => PacketDecoder.decode(r.ts, r.frame, ipv6))
+    spark.read.format("pcap")
+      .option("splitBytes", targetSplitBytes)
+      .option("ipv6", ipv6)
+      .load(paths: _*)
+      .as[Packet]
   }
 
   /** Read the records whose HEADER starts inside [start, end); executed on
@@ -147,17 +155,21 @@ object PcapSource {
   def readSplit(s: PcapSplit): Iterator[PcapRecord] =
     if (s.ng) readSplitNg(s) else readSplitClassic(s)
 
-  private def readSplitClassic(s: PcapSplit): Iterator[PcapRecord] = {
-    val order = if (s.bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN
+  /** The split's bytes plus `overhang` (cut at EOF), in the capture's byte
+    * order. [[MaxSplitBytes]] keeps them within one array. */
+  private def readRange(s: PcapSplit, overhang: Int): java.nio.ByteBuffer = {
     val hp = new Path(s.path)
-    val fs = hp.getFileSystem(new Configuration())
-    // Buffer = split + resync window + one max-size record overhang.
-    val readEnd = math.min(s.fileLen, s.end + MaxFrame.toLong + PcapFormat.RecordHeaderLen)
-    val buf = new Array[Byte]((readEnd - s.start).toInt)
-    val in = fs.open(hp)
+    val buf = new Array[Byte]((math.min(s.fileLen, s.end + overhang) - s.start).toInt)
+    val in = hp.getFileSystem(new Configuration()).open(hp)
     try in.readFully(s.start, buf) finally in.close()
+    java.nio.ByteBuffer.wrap(buf)
+      .order(if (s.bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
+  }
 
-    val bb = java.nio.ByteBuffer.wrap(buf).order(order)
+  private def readSplitClassic(s: PcapSplit): Iterator[PcapRecord] = {
+    // Buffer = split + resync window + one max-size record overhang.
+    val bb = readRange(s, MaxFrame + PcapFormat.RecordHeaderLen)
+    val buf = bb.array()
     def u32(off: Int): Long = if (off + 4 <= buf.length) bb.getInt(off) & 0xffffffffL else -1L
 
     // A header at `off` is plausible if incl_len is sane and, recursively,
@@ -190,37 +202,15 @@ object PcapSource {
         o
       }
 
-    new Iterator[PcapRecord] {
-      private var off = syncedStart
-      private var nextRec: PcapRecord = _
-      private var done = false
-      private def advance(): Unit = {
-        // stop once the record header would start at/after the split end
-        if (s.start + off >= s.end || off + PcapFormat.RecordHeaderLen > buf.length) { done = true; return }
-        val tsSec = u32(off)
-        val tsFrac = u32(off + 4)
-        val incl = u32(off + 8)
-        if (incl < 0 || off + PcapFormat.RecordHeaderLen + incl > buf.length) { done = true; return }
-        val from = off + PcapFormat.RecordHeaderLen
-        nextRec = PcapRecord(
-          tsSec + tsFrac / (if (s.nanos) 1e9 else 1e6),
-          java.util.Arrays.copyOfRange(buf, from, from + incl.toInt))
-        off = from + incl.toInt
-      }
-      override def hasNext: Boolean = {
-        if (!done && nextRec == null) advance()
-        !done && nextRec != null
-      }
-      override def next(): PcapRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec; nextRec = null; r
-      }
+    Iterator.unfold(syncedStart) { off =>
+      // stop once the record header would start at/after the split end
+      val from = off + PcapFormat.RecordHeaderLen
+      val incl = u32(off + 8)
+      if (s.start + off >= s.end || from > buf.length || incl < 0 || from + incl > buf.length) None
+      else Some((PcapRecord(u32(off) + u32(off + 4) / (if (s.nanos) 1e9 else 1e6),
+        java.util.Arrays.copyOfRange(buf, from, from + incl.toInt)), from + incl.toInt))
     }
   }
-
-  /** Largest credible pcapng block (frame + framing + options slack);
-    * bounds resync scanning and the cross-split overhang. */
-  private val MaxNgBlock = MaxFrame + 4096
 
   /** pcapng byte-range reader: resynchronize to a BLOCK boundary, then
     * emit the packet blocks whose header starts inside [start, end).
@@ -233,14 +223,8 @@ object PcapSource {
     * single-section files only, which is what capture tools write.
     */
   private def readSplitNg(s: PcapSplit): Iterator[PcapRecord] = {
-    val order = if (s.bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN
-    val hp = new Path(s.path)
-    val fs = hp.getFileSystem(new Configuration())
-    val readEnd = math.min(s.fileLen, s.end + MaxNgBlock.toLong)
-    val buf = new Array[Byte]((readEnd - s.start).toInt)
-    val in = fs.open(hp)
-    try in.readFully(s.start, buf) finally in.close()
-    val bb = java.nio.ByteBuffer.wrap(buf).order(order)
+    val bb = readRange(s, MaxNgBlock)
+    val buf = bb.array()
     def u32(off: Int): Long = if (off + 4 <= buf.length) bb.getInt(off) & 0xffffffffL else -1L
 
     // The anchor (depth == ResyncChain) must be fully inside the buffer —
@@ -269,46 +253,28 @@ object PcapSource {
         o
       }
 
-    new Iterator[PcapRecord] {
-      private var off = syncedStart
-      private var nextRec: PcapRecord = _
-      private var done = false
-      private def advance(): Unit = {
-        while (!done && nextRec == null) {
-          if (s.start + off >= s.end ||
-              off + PcapngFormat.FramingLen > buf.length) { done = true; return }
-          val total = u32(off + 4)
-          if (total < PcapngFormat.FramingLen || total % 4 != 0 ||
-              off + total > buf.length) { done = true; return }
-          val blockType = u32(off).toInt
-          val bodyStart = off + 8
-          val bodyEnd = off + total.toInt - 4
-          if (blockType == PcapngFormat.EpbType && bodyEnd - bodyStart >= 20) {
-            val ifc = bb.getInt(bodyStart)
-            val ts64 = (bb.getInt(bodyStart + 4).toLong << 32) |
-              (bb.getInt(bodyStart + 8) & 0xffffffffL)
-            val capLen = bb.getInt(bodyStart + 12)
-            if (capLen >= 0 && bodyStart + 20 + capLen <= bodyEnd) {
-              nextRec = PcapRecord(s.ifaceTs(ifc).toSeconds(ts64),
-                java.util.Arrays.copyOfRange(buf, bodyStart + 20, bodyStart + 20 + capLen))
-            }
-          } else if (blockType == PcapngFormat.SpbType && bodyEnd - bodyStart >= 4) {
-            val orig = bb.getInt(bodyStart)
-            val cap = math.min(math.max(orig, 0), bodyEnd - bodyStart - 4)
-            nextRec = PcapRecord(0.0,
-              java.util.Arrays.copyOfRange(buf, bodyStart + 4, bodyStart + 4 + cap))
-          }
-          off += total.toInt
-        }
-      }
-      override def hasNext: Boolean = {
-        if (!done && nextRec == null) advance()
-        !done && nextRec != null
-      }
-      override def next(): PcapRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec; nextRec = null; r
-      }
+    // (offset, total length) of each block whose header starts in the split
+    Iterator.unfold(syncedStart) { off =>
+      val total = u32(off + 4)
+      if (s.start + off >= s.end || off + PcapngFormat.FramingLen > buf.length ||
+          total < PcapngFormat.FramingLen || total % 4 != 0 || off + total > buf.length) None
+      else Some(((off, total.toInt), off + total.toInt))
+    }.flatMap { case (off, total) =>
+      val blockType = u32(off).toInt
+      val bodyStart = off + 8
+      val bodyEnd = off + total - 4
+      if (blockType == PcapngFormat.EpbType && bodyEnd - bodyStart >= 20) {
+        val ifc = bb.getInt(bodyStart)
+        val ts64 = (bb.getInt(bodyStart + 4).toLong << 32) |
+          (bb.getInt(bodyStart + 8) & 0xffffffffL)
+        val capLen = bb.getInt(bodyStart + 12)
+        Option.when(capLen >= 0 && bodyStart + 20 + capLen <= bodyEnd)(
+          PcapRecord(s.ifaceTs(ifc).toSeconds(ts64),
+            java.util.Arrays.copyOfRange(buf, bodyStart + 20, bodyStart + 20 + capLen)))
+      } else if (blockType == PcapngFormat.SpbType && bodyEnd - bodyStart >= 4) {
+        val cap = math.min(math.max(bb.getInt(bodyStart), 0), bodyEnd - bodyStart - 4)
+        Some(PcapRecord(0.0, java.util.Arrays.copyOfRange(buf, bodyStart + 4, bodyStart + 4 + cap)))
+      } else None
     }
   }
 }

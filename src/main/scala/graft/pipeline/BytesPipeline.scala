@@ -33,7 +33,7 @@ object BytesPipeline {
       width: Int = 1525, // README.md:8 — initial 1525 B of the IP layer
       widen: Boolean = true, // byte(i) columns at the sink for schema parity (§7.4)
       splittable: Boolean = false,
-      targetSplitBytes: Long = 128L * 1024 * 1024,
+      targetSplitBytes: Long = PcapSource.DefaultSplitBytes,
       // Engine extension: decode IPv6 datagrams too. Default false = the
       // reference-parity preset (BytesProcessor.py:222 checks dpkt.ip.IP
       // only, so v6 frames drop).
@@ -89,21 +89,28 @@ object BytesPipeline {
   private def sinkFrame(df: DataFrame, cfg: Config): DataFrame =
     if (cfg.widen) widen(df, cfg.width) else df
 
-  /** Write `df` as a sink to `path` and keep it only when it has rows:
-    * the adversarial table exists only when non-empty (:115-117). The row
-    * count rides the write as an `observe` node, so emptiness costs no
-    * extra job. Returns `Some(path)` iff rows were written. Only for a
-    * staged path no reader lists yet: an empty table is written, then
-    * deleted. */
-  private def writeNonEmpty(df: DataFrame, path: String, cfg: Config): Option[String] = {
+  /** The dual sink (:110-119): all of `labeled` to `dataPath`, its forward
+    * rows to `advPath` only when there are any (:115-117). An `observe`
+    * node on the data write, which holds every forward row, counts them:
+    * no extra job, and no empty table written and then deleted. The count
+    * also sizes the adversarial table, one file per ~128 MiB of floats (the
+    * default split size), because a 1532-column Parquet file costs ~0.4 MB
+    * of footer and dictionaries however few rows it holds. Returns
+    * `Some(advPath)` iff written. */
+  private def writeDual(labeled: DataFrame, dataPath: String, advPath: String,
+                        cfg: Config): Option[String] = {
+    val fwd = forwardMask(cfg.rules)
     val obs = org.apache.spark.sql.Observation()
-    sinkFrame(df.observe(obs, count(lit(1)).as("rows")), cfg)
-      .write.mode("overwrite").parquet(path)
-    if (obs.get("rows") != 0L) Some(path)
+    sinkFrame(labeled.observe(obs, count(when(fwd, 1)).as("fwd")), cfg)
+      .write.mode("overwrite").parquet(dataPath)
+    val nFwd = obs.get("fwd").asInstanceOf[Long]
+    if (nFwd == 0L) None
     else {
-      val (fs, p) = fsOf(df.sparkSession, path)
-      fs.delete(p, true)
-      None
+      val fileBytes = PcapSource.DefaultSplitBytes
+      val files = math.max(1L, (nFwd * cfg.width * 4L + fileBytes - 1) / fileBytes)
+      sinkFrame(labeled.filter(fwd).coalesce(files.toInt), cfg)
+        .write.mode("overwrite").parquet(advPath)
+      Some(advPath)
     }
   }
 
@@ -122,7 +129,6 @@ object BytesPipeline {
                    checkpoint: Option[String] = None, availableNow: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val packets = PcapSource.packetsStream(spark, watchDir, ipv6 = cfg.ipv6)
-    val fwd = forwardMask(cfg.rules)
     val writer = features(packets, cfg)
       .writeStream
       .option("checkpointLocation", checkpoint.getOrElse(s"$outDir/_checkpoint"))
@@ -134,18 +140,12 @@ object BytesPipeline {
         // each batch overwrites its own batch_id=N directory, which readers
         // see as a partition column, so a replayed batch replaces its own
         // output instead of appending duplicates. A batch with no rows left
-        // leaves a data/batch_id=N holding one zero-row file.
+        // leaves a data/batch_id=N holding one zero-row file; a batch with
+        // no forward rows touches no adversarial path.
         val labeled = batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          def sink(df: DataFrame, table: String): Unit =
-            sinkFrame(df, cfg).write.mode("overwrite").parquet(s"$outDir/$table/batch_id=$batchId")
-          sink(labeled, "data")
-          // checked before writing, not observed during the write: a benign
-          // batch must never create (and then delete) files a concurrent
-          // reader of the live adversarial table could list
-          val adv = labeled.filter(fwd)
-          if (!adv.isEmpty) sink(adv, "adversarial")
-        } finally labeled.unpersist()
+        try writeDual(labeled, s"$outDir/data/batch_id=$batchId",
+          s"$outDir/adversarial/batch_id=$batchId", cfg)
+        finally labeled.unpersist()
         ()
       }
       .start()
@@ -249,9 +249,7 @@ object BytesPipeline {
       val v = (prev ++ stagedVersions(spark, outDir)).foldLeft(0L)(math.max) + 1
       val stage = s"$outDir/v=$v"
       val dataPath = s"$stage/data"
-      sinkFrame(labeled, cfg).write.mode("overwrite").parquet(dataPath)
-      val advPath =
-        writeNonEmpty(labeled.filter(forwardMask(cfg.rules)), s"$stage/adversarial", cfg)
+      val advPath = writeDual(labeled, dataPath, s"$stage/adversarial", cfg)
       // COMMIT: the snapshot becomes visible in one atomic file create.
       val (fs, _) = fsOf(spark, outDir)
       fs.create(new org.apache.hadoop.fs.Path(outDir, s"$MarkerPrefix$v"), false).close()

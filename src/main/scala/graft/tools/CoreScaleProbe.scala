@@ -41,23 +41,28 @@ object CoreScaleProbe {
         .groupBy("k").agg(sum("rn")).count()
       graft.Tables(spark, dir, "lineitem").select(count(lit(1))).count()
     }
+    // A pass that throws is no timing: its key reports null and the probe
+    // exits non-zero.
     val results = args.toSeq.map { name =>
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try graft.SparkEntry.queries(name)(spark, dir).count()
-        catch { case e: Throwable =>
-          System.err.println(s"[corescale] $name FAILED: ${e.getMessage}")
-        }
+        val ok = try { graft.SparkEntry.queries(name)(spark, dir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[corescale] $name FAILED: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        dt
+        Option.when(ok)(dt)
       }
-      println(f"[corescale] cpus=$cpus $name%-28s ${times.min}%7.2f s (passes ${times.map(t => f"$t%.2f").mkString(", ")})")
-      name -> times.min
+      val best = Option.when(times.forall(_.isDefined))(times.flatten.min)
+      println(f"[corescale] cpus=$cpus $name%-28s ${best.fold("FAILED")(t => f"$t%7.2f s")} " +
+        s"(passes ${times.map(_.fold("failed")(t => f"$t%.2f")).mkString(", ")})")
+      name -> best
     }
-    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s""""$k":${v.fold("null")(t => f"$t%.3f")}""" }
+      .mkString("{", ",", "}")
     println(s"""{"probe":"core_scale","cpus":$cpus,"sf_dir":"$dir","queries":$qs}""")
     spark.stop()
+    if (results.exists(_._2.isEmpty)) sys.exit(1)
   }
 }

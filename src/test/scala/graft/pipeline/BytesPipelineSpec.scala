@@ -6,6 +6,7 @@ import graft.pcap.{Fixtures, PcapSource}
 import java.nio.file.Files
 import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end flagship test: synthesize a pcap on disk, run the full
@@ -70,6 +71,39 @@ class BytesPipelineSpec extends SparkSpec {
     // adversarial sink = forward rows only (src in attackers & ts in rule range)
     val adv = spark.read.parquet(advPath.get).collect()
     assert(adv.map(_.getDouble(0)).toSeq == Seq(130.0))
+    // sized from its observed count: one row is one part file
+    assert(partFiles(advPath.get).size == 1)
+  }
+
+  private def partFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten.filter(_.getName.startsWith("part-"))
+
+  test("splittable run: one task per split, adversarial files sized from the forward count") {
+    // 120 packets in range, every third one forward, over ~12 splits
+    val recs = (0 until 120).map { i =>
+      val src = if (i % 3 == 0) "10.0.0.66" else s"10.0.1.${i % 7}"
+      (100.0 + i * 0.5, frame(src, "10.0.0.2", 1000 + i, 80, 6, Array.fill[Byte](i % 40)(i.toByte)))
+    }
+    val dir = Files.createTempDirectory("graft-splitrun").toFile
+    dir.deleteOnExit()
+    val pcap = new java.io.File(dir, "cap.pcap")
+    Files.write(pcap.toPath, pcapOf(recs: _*))
+    val split = cfg.copy(splittable = true, targetSplitBytes = 1024)
+    val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 1024).size
+    assert(nSplits > 8)
+
+    val r = BytesPipeline.runAccounted(spark, Seq(pcap.getAbsolutePath), s"$dir/split", split)
+    val (wholeData, wholeAdv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/whole", cfg)
+    assert(r.ingestedPackets == 120)
+    for ((a, b) <- Seq(r.dataPath -> wholeData, r.advPath.get -> wholeAdv.get)) {
+      val (x, y) = (spark.read.parquet(a), spark.read.parquet(b))
+      assert(x.schema == y.schema && x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, a)
+    }
+    assert(spark.read.parquet(r.advPath.get).count() == 40)
+    // every split is its own task, and so its own data file ...
+    assert(partFiles(r.dataPath).size == nSplits)
+    // ... while 40 forward rows are far below 128 MiB: one file
+    assert(partFiles(r.advPath.get).size == 1)
   }
 
   /** Straight-line reimplementation of the payload contract (SURVEY §1.3)
@@ -148,10 +182,15 @@ class BytesPipelineSpec extends SparkSpec {
 
     val whole = PcapSource.packets(spark, Seq(pcap.getAbsolutePath))
       .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
-    val split = PcapSource.packetsSplittable(spark, Seq(pcap.getAbsolutePath), targetSplitBytes = 4096)
-      .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
+    val splitDs = PcapSource.packetsSplittable(spark, Seq(pcap.getAbsolutePath), targetSplitBytes = 4096)
+    val split = splitDs.collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
     assert(split.length == whole.length)
     assert(split.sameElements(whole))
+    // one scan partition per planned split, and no shuffle to place them
+    val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 4096).size
+    assert(nSplits > 1 && splitDs.rdd.getNumPartitions == nSplits)
+    val plan = splitDs.queryExecution.executedPlan
+    assert(SinkPlans.find(plan)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty, plan.toString)
   }
 
   test("flagship pipeline ingests pcapng captures unchanged (format dispatch)") {

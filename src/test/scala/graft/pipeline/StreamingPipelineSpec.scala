@@ -44,8 +44,10 @@ class StreamingPipelineSpec extends SparkSpec {
         assert(d.count() == 3)
         assert(d.columns.length == 7 + 32 + 1) // widened + batch_id partition
         assert(d.select("batch_id").distinct().count() == 2) // one per micro-batch
-        // adversarial unchanged by the benign batch
+        // adversarial unchanged by the benign batch, which touched no
+        // adversarial path at all
         assert(spark.read.parquet(s"$out/adversarial").count() == 1)
+        assert(!new java.io.File(s"$out/adversarial/batch_id=1").exists())
       } finally q.stop()
     }
     // each micro-batch writes both sinks straight from WidenExec: no
