@@ -2,7 +2,7 @@ package graft.pcap
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -43,16 +43,11 @@ final class PcapDataSource extends TableProvider with DataSourceRegister {
 }
 
 object PcapTable {
-  /** The Packet case-class schema, in declaration order. */
-  val schema: StructType = StructType(Seq(
-    StructField("timestamp", DoubleType, nullable = false),
-    StructField("src_ip", StringType, nullable = false),
-    StructField("dst_ip", StringType, nullable = false),
-    StructField("src_port", LongType, nullable = false),
-    StructField("dst_port", LongType, nullable = false),
-    StructField("protocol", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("label", StringType, nullable = false)))
+  /** The [[Packet]] encoder's schema, so the splittable scan and the
+    * whole-file reader agree on nullability too (strings and `payload`
+    * nullable, numbers not): both read modes write the same Parquet
+    * schema. */
+  val schema: StructType = Encoders.product[Packet].schema
 
   /** `load(p)` passes `path`; `load(p1, p2, ...)` passes `paths` as a JSON
     * array of strings. */

@@ -3,9 +3,9 @@ package graft.queries
 import graft._
 import graft.ops.ColumnOps._
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.Files
 
 /** TRUE streaming paths under the DuckDB oracle gate via deterministic
@@ -17,6 +17,16 @@ import java.nio.file.Files
   * the committed sink's contents. The oracle is the batch twin over the
   * ORIGINAL events table — a streaming bug (lost state, double-apply,
   * torn snapshot, watermark mis-eviction) hash-fails the round.
+  *
+  * Every key runs on one scaffold: [[replay]] owns the run's scratch
+  * sink and checkpoint dirs and returns the read-back after an eager
+  * `localCheckpoint()`, and [[runToParquet]] drives a stream into the
+  * sink and reads it back. `replay` deletes the dirs in a `finally`, and
+  * a stream whose wait fails is stopped first, so a failed replay leaves
+  * neither a running query nor a sink or checkpoint under the temp dir.
+  * Keys whose stream does not fit `runToParquet` (the crash/restart
+  * keys, the versioned-snapshot upserts, the observed-metrics key) build
+  * their own query inside `replay`.
   *
   * Determinism contract: the staged input is a pure function of the
   * events table (originals + EXACT duplicates of event_id % 10 == 0 in
@@ -95,8 +105,11 @@ object StreamingReplayQ {
     StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
   }
 
+  /** One landing file per micro-batch, read with the landing's static
+    * schema (`eventLandingSchema` or `docLandingSchema`, named by every
+    * caller). */
   private[graft] def fileStream(spark: SparkSession, landing: String,
-      schema: org.apache.spark.sql.types.StructType = eventLandingSchema): DataFrame =
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one file per micro-batch
       .parquet(landing)
@@ -118,14 +131,18 @@ object StreamingReplayQ {
     * join gap − window width), far above any cut between the two. */
   private val SentinelOffsetMs = 370L * 24 * 3600 * 1000
 
-  /** Materialize the query's presentation frame off its scratch sink,
-    * then delete the sink + checkpoint: repeated bench/verify rounds must
-    * not grow /tmp without bound (each stream run writes a fresh sink by
-    * design — the run IS the operator — but its bytes need only outlive
-    * the localCheckpoint that materializes them).
+  /** The scaffold every replay key runs on: creates a scratch sink and
+    * checkpoint dir (`graft_<tag>_sink*`, `graft_<tag>_ckpt*`), runs
+    * `body` on them and returns its frame after `localCheckpoint()`.
+    * The checkpoint is eager, so the rows are materialized before the
+    * dirs go. Both dirs, and any `extra` dir the key owns, are deleted in
+    * a `finally`: a failed replay strands nothing under the temp dir, and
+    * repeated bench/verify rounds never grow it (each stream run writes a
+    * fresh sink by design — the run IS the operator — but its bytes need
+    * only outlive the read-back).
     *
     * Presentation sorts (r18, guide §2.4 remove shuffles outright): every
-    * caller sorts its read-back frame via `coalesce(1).sortWithinPartitions`
+    * body sorts its read-back frame via `coalesce(1).sortWithinPartitions`
     * instead of `orderBy` — a global sort range-partitions, which costs a
     * separate SAMPLING job (a second scan of the sink) plus an exchange,
     * all to order a frame bounded by the events/documents grain (≤ ~100k
@@ -135,11 +152,39 @@ object StreamingReplayQ {
     * frames whose size is the DECLARED RESULT's size (small by contract),
     * not a data-scale intermediate — a 100 TB run's heavy lifting happens
     * upstream in the stream itself. */
-  private def materializeAndClean(out: DataFrame, dirs: String*): DataFrame = {
-    val checkpointed = out.localCheckpoint()
-    dirs.foreach(d => deleteRecursively(new java.io.File(d)))
-    checkpointed
+  private[graft] def replay(tag: String, extra: String*)(
+      body: (String, String) => DataFrame): DataFrame = {
+    val sink = Files.createTempDirectory(s"graft_${tag}_sink").toString
+    val ckpt = Files.createTempDirectory(s"graft_${tag}_ckpt").toString
+    try body(sink, ckpt).localCheckpoint()
+    finally (Seq(sink, ckpt) ++ extra).foreach(d => deleteRecursively(new java.io.File(d)))
   }
+
+  /** Run `ds` to completion under `Trigger.AvailableNow` with its
+    * checkpoint in `ckpt`, then read `sink` back. Append mode writes the
+    * Parquet file sink; `update = true` appends each micro-batch's rows
+    * to `sink` through `foreachBatch`. */
+  private[graft] def runToParquet[T](ds: Dataset[T], sink: String, ckpt: String,
+                                     update: Boolean = false): DataFrame = {
+    runToSink(ds, sink, ckpt, update)
+    ds.sparkSession.read.parquet(sink)
+  }
+
+  /** [[runToParquet]] without the read-back, for a leg whose sink is
+    * never read. */
+  private def runToSink[T](ds: Dataset[T], sink: String, ckpt: String,
+                           update: Boolean): Unit = {
+    val w = ds.writeStream.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+    awaitOrStop((
+      if (update) w.outputMode("update")
+        .foreachBatch((b: Dataset[T], _: Long) => b.write.mode("append").parquet(sink))
+      else w.format("parquet").option("path", sink)).start())
+  }
+
+  /** Wait for `q` to finish; if the wait fails, stop the query, so it
+    * never goes on writing into dirs that [[replay]] is deleting. */
+  private def awaitOrStop(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally if (q.isActive) q.stop()
 
   /** Streaming exact dedup, end-to-end: landing (with injected exact
     * duplicates) → dropDuplicatesWithinWatermark keyed state → append
@@ -152,21 +197,13 @@ object StreamingReplayQ {
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
       val landing = landingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stdedup_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stdedup_ckpt").toString
-      val q = StreamingOps.dedupEvents(fileStream(spark, landing), SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stdedup") { (sink, ckpt) =>
+        runToParquet(StreamingOps.dedupEvents(
+            fileStream(spark, landing, eventLandingSchema), SpanProofWatermark), sink, ckpt)
           .select(col("event_id"), date_format(col("ts"), tsSec).as("ts_s"),
             col("user_id"), col("event_type"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("event_id"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("event_id")
+      }
     },
     Some("""SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | user_id, event_type, CAST(round(value*100) AS BIGINT) AS value_cents
@@ -190,19 +227,12 @@ object StreamingReplayQ {
       // replays' 4-partition clone).
       val spark = tunedStreamSession(spark0)
       val landing = landingDir(spark, dir)
-      val snap = Files.createTempDirectory("graft_stupsert_snap").toString
-      val ckpt = Files.createTempDirectory("graft_stupsert_ckpt").toString
-      val q = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()))
-      q.awaitTermination()
-      val latest = StreamingOps.latestSnapshot(snap)
-        .getOrElse(sys.error("no committed snapshot version after replay"))
-      materializeAndClean(
-        spark.read.parquet(latest)
-          .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
-            col("event_id"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        snap, ckpt)
+      replay("stupsert") { (snap, ckpt) =>
+        awaitOrStop(StreamingOps.upsertLatestSink(
+          fileStream(spark, landing, eventLandingSchema), snap, ckpt,
+          trigger = Some(Trigger.AvailableNow())))
+        latestUpsertFrame(spark, snap, "replay")
+      }
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | event_id, CAST(round(value*100) AS BIGINT) AS value_cents
@@ -211,6 +241,15 @@ object StreamingReplayQ {
            |          ORDER BY ts DESC, event_id DESC) AS rn
            |      FROM events) t
            |WHERE rn = 1 ORDER BY user_id""".stripMargin))
+
+  /** The upsert keys' read-back: the newest COMMITTED snapshot version
+    * under `snap`, presented as (user_id, ts_s, event_id, value_cents). */
+  private def latestUpsertFrame(spark: SparkSession, snap: String, run: String): DataFrame =
+    spark.read.parquet(StreamingOps.latestSnapshot(snap)
+        .getOrElse(sys.error(s"no committed snapshot version after $run")))
+      .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
+        col("event_id"), cents(col("value")).as("value_cents"))
+      .coalesce(1).sortWithinPartitions("user_id")
 
   /** Write one single-file parquet slice `slice-kk.parquet` into `build`
     * with an mtime strictly increasing in k — the file source orders
@@ -344,23 +383,14 @@ object StreamingReplayQ {
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
       val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stsess_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stsess_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.userSessions(
-          fileStream(spark, landing).as[graft.streaming.Event],
-          gapMs = 30L * 60 * 1000, watermark = SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stsess") { (sink, ckpt) =>
+        runToParquet(StreamingOps.userSessions(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event],
+            gapMs = 30L * 60 * 1000, watermark = SpanProofWatermark), sink, ckpt)
           .select(col("user_id"), col("start_ms"), col("end_ms"), col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "start_ms"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id", "start_ms")
+      }
     },
     Some(StreamingBatchQ.sessionIslandsCte + """,
            |s AS (SELECT user_id, sid,
@@ -539,21 +569,11 @@ object StreamingReplayQ {
     "st_running_totals",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttotals_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttotals_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.runningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("sttotals") { (sink, ckpt) =>
+        runToParquet(StreamingOps.runningTotals(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event]),
+            sink, ckpt, update = true)
           .groupBy(col("user_id"))
           .agg(
             countDistinct(col("n_events")).as("n_updates"),
@@ -561,8 +581,8 @@ object StreamingReplayQ {
           .select(col("user_id"), col("n_updates"),
             col("s.n_events").as("n_events"),
             col("s.value_micro_total").as("value_micro_total"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id")
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -588,27 +608,17 @@ object StreamingReplayQ {
     "st_type_map_state",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttypemap_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttypemap_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.userTypeSummaries(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTypeSummary], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("sttypemap") { (sink, ckpt) =>
+        runToParquet(StreamingOps.userTypeSummaries(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event]),
+            sink, ckpt, update = true)
           .groupBy(col("user_id"))
           .agg(max(struct(col("n_events"), col("n_batches"), col("types_str"))).as("s"))
           .select(col("user_id"), col("s.n_batches").as("n_batches"),
             col("s.n_events").as("n_events"), col("s.types_str").as("types_str"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id")
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, COALESCE(event_type, '∅') AS et,
@@ -637,22 +647,13 @@ object StreamingReplayQ {
     "st_span_verdicts",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stspan_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stspan_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.spanVerdicts(
-          fileStream(spark, landing, docLandingSchema).as[graft.streaming.DocIn])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stspan") { (sink, ckpt) =>
+        runToParquet(StreamingOps.spanVerdicts(
+            fileStream(spark, landing, docLandingSchema).as[graft.streaming.DocIn]), sink, ckpt)
           .select(col("doc_id"), col("span_idx"), col("dup"))
-          .coalesce(1).sortWithinPartitions("doc_id", "span_idx"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("doc_id", "span_idx")
+      }
     }},
     Some("""WITH d AS (SELECT doc_id,
            |  list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks FROM documents),
@@ -682,38 +683,28 @@ object StreamingReplayQ {
     "st_heavy_hitters",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sthh_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sthh_ckpt").toString
       val spark2 = spark; import spark2.implicits._
       val k = 32
       val toks = fileStream(spark, landing, docLandingSchema).as[graft.streaming.DocIn]
         .flatMap(d => d.text.split(" ").iterator
           .filter(_.nonEmpty).map(graft.streaming.TokIn(_)))
-      val q = StreamingOps.bucketHeavyHitters(toks, k = k, buckets = 32)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.BucketHitters], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val summaries = spark.read.parquet(sink)
-      val seenTotal = summaries.groupBy(col("bucket"))
-        .agg(max(col("seen")).as("s")).agg(sum(col("s"))).head().getLong(0)
-      val cands = summaries.select(explode(col("fps")).as("fp")).distinct()
-      val tokens = Tables(spark, dir, "documents")
-        .select(explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
-      val n = tokens.count()
-      materializeAndClean(
+      replay("sthh") { (sink, ckpt) =>
+        val summaries = runToParquet(StreamingOps.bucketHeavyHitters(toks, k = k, buckets = 32),
+          sink, ckpt, update = true)
+        val seenTotal = summaries.groupBy(col("bucket"))
+          .agg(max(col("seen")).as("s")).agg(sum(col("s"))).head().getLong(0)
+        val cands = summaries.select(explode(col("fps")).as("fp")).distinct()
+        val tokens = Tables(spark, dir, "documents")
+          .select(explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
+        val n = tokens.count()
         tokens.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
           .withColumn("fp", xxhash64(col("tok")))
           .join(cands, "fp") // streamed candidates gate the output
           .filter(col("cnt") * (k + 1) > n)
           .select(col("tok"), col("cnt"),
             lit(n).as("n_total"), lit(seenTotal).as("seen_total"))
-          .coalesce(1).sortWithinPartitions("tok"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("tok")
+      }
     }},
     Some("""WITH t AS (SELECT unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
            |          FROM documents),
@@ -739,24 +730,15 @@ object StreamingReplayQ {
     "st_timer_sessions",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttimer_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttimer_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.timerSessions(
-          fileStream(spark, landing).as[graft.streaming.Event],
-          gapMs = 30L * 60 * 1000, watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("sttimer") { (sink, ckpt) =>
+        runToParquet(StreamingOps.timerSessions(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event],
+            gapMs = 30L * 60 * 1000, watermark = "30 minutes"), sink, ckpt)
           .filter(col("user_id") >= 0) // drop the sentinel's own session
           .select(col("user_id"), col("start_ms"), col("end_ms"), col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "start_ms"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id", "start_ms")
+      }
     }},
     Some(StreamingBatchQ.sessionIslandsCte + """
            |SELECT user_id,
@@ -874,32 +856,30 @@ object StreamingReplayQ {
   // knob, not a local one; the joins stay on the session-default
   // HDFS-backed provider.
 
+  /** The stream-stream join keys' shared run: both parity landings
+    * streamed through `join` into a replay sink, then the sentinel
+    * user's rows dropped and the pairs rolled up per user by `aggs`. */
+  private def joinReplay(spark0: SparkSession, dir: String, tag: String)(
+      join: (DataFrame, DataFrame) => DataFrame)(aggs: Column*): DataFrame = {
+    val spark = tunedStreamSession(spark0)
+    val left = joinLandingDir(spark, dir, 0)
+    val right = joinLandingDir(spark, dir, 1)
+    replay(tag) { (sink, ckpt) =>
+      runToParquet(join(fileStream(spark, left, eventLandingSchema),
+          fileStream(spark, right, eventLandingSchema)), sink, ckpt)
+        .filter(col("user_id") >= 0) // drop the sentinel user's rows
+        .groupBy(col("user_id"))
+        .agg(aggs.head, aggs.tail: _*)
+        .coalesce(1).sortWithinPartitions("user_id")
+    }
+  }
+
   val stJoinReplay: Q = Q(
     "st_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stjoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stjoin_ckpt").toString
-      val q = StreamingOps.timeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop sentinel self-pairs
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark0, dir) => joinReplay(spark0, dir, "stjoin")(StreamingOps.timeBoundJoin(_, _,
+        maxGap = "30 minutes", watermark = SpanProofWatermark))(
+      count(lit(1)).as("n_pairs"),
+      sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -925,31 +905,10 @@ object StreamingReplayQ {
     * emission (duplicate), or an evicted-too-early match hash-fails. */
   val stOuterJoinReplay: Q = Q(
     "st_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stojoin_ckpt").toString
-      val q = StreamingOps.leftOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(col("r_id")).as("n_matched"),
-            sum(col("l_id")).as("l_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark0, dir) => joinReplay(spark0, dir, "stojoin")(StreamingOps.leftOuterTimeBoundJoin(_, _,
+        maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"), count(col("r_id")).as("n_matched"),
+      sum(col("l_id")).as("l_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -970,31 +929,10 @@ object StreamingReplayQ {
     * JOIN twin. */
   val stRightOuterJoinReplay: Q = Q(
     "st_right_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_strojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_strojoin_ckpt").toString
-      val q = StreamingOps.rightOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(col("l_id")).as("n_matched"),
-            sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark0, dir) => joinReplay(spark0, dir, "strojoin")(StreamingOps.rightOuterTimeBoundJoin(_, _,
+        maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"), count(col("l_id")).as("n_matched"),
+      sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT r.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -1020,34 +958,13 @@ object StreamingReplayQ {
     * double emission, or an evicted-too-early match hash-fails. */
   val stFullOuterJoinReplay: Q = Q(
     "st_full_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stfojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stfojoin_ckpt").toString
-      val q = StreamingOps.fullOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(when(col("l_id").isNotNull && col("r_id").isNotNull, lit(1)))
-              .as("n_matched"),
-            count(when(col("r_id").isNull, lit(1))).as("n_left_only"),
-            count(when(col("l_id").isNull, lit(1))).as("n_right_only"),
-            sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark0, dir) => joinReplay(spark0, dir, "stfojoin")(StreamingOps.fullOuterTimeBoundJoin(_, _,
+        maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"),
+      count(when(col("l_id").isNotNull && col("r_id").isNotNull, lit(1))).as("n_matched"),
+      count(when(col("r_id").isNull, lit(1))).as("n_left_only"),
+      count(when(col("l_id").isNull, lit(1))).as("n_right_only"),
+      sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT COALESCE(l.user_id, r.user_id) AS user_id,
@@ -1080,26 +997,17 @@ object StreamingReplayQ {
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
       val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stwin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stwin_ckpt").toString
-      val in = fileStream(spark, landing)
+      val in = fileStream(spark, landing, eventLandingSchema)
         .withColumn("value", cents(col("value")))
-      val q = StreamingOps.tumblingCounts(in,
-          window_ = "10 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stwin") { (sink, ckpt) =>
+        runToParquet(StreamingOps.tumblingCounts(in,
+            window_ = "10 minutes", watermark = "30 minutes"), sink, ckpt)
           .filter(!(col("event_type") <=> "sentinel")) // null-safe: a NULL type is data, not a sentinel
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("event_type"), col("n_events"),
             col("value_sum").as("value_cents"))
-          .coalesce(1).sortWithinPartitions("w_start", "event_type"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("w_start", "event_type")
+      }
     },
     Some("""SELECT strftime(time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS w_start,
            | event_type, COUNT(*) AS n_events,
@@ -1122,23 +1030,14 @@ object StreamingReplayQ {
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
       val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stswin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stswin_ckpt").toString
-      val q = StreamingOps.sessionCounts(fileStream(spark, landing),
-          gap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stswin") { (sink, ckpt) =>
+        runToParquet(StreamingOps.sessionCounts(fileStream(spark, landing, eventLandingSchema),
+            gap = "30 minutes", watermark = "30 minutes"), sink, ckpt)
           .filter(col("user_id") >= 0) // drop the sentinel user's sessions
           .select(col("user_id"), date_format(col("w_start"), tsSec).as("w_start"),
             col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "w_start"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id", "w_start")
+      }
     },
     Some(StreamingBatchQ.sessionIslandsCte + """
            |SELECT user_id, strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS w_start, COUNT(*) AS n_events
@@ -1177,29 +1076,20 @@ object StreamingReplayQ {
       val spark = tunedStreamSession(spark0)
       val left = joinLandingDir(spark, dir, 0)
       val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stjwin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stjwin_ckpt").toString
-      // Real-span bound for the post-sink sentinel-window cut (1-row
-      // driver fetch, same constant traffic as the landing builders).
-      val t1 = Tables(spark, dir, "events")
-        .agg(max(col("ts"))).head().getTimestamp(0)
-      val joined = StreamingOps.timeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-      val q = joined
-        .groupBy(window(col("l_ts"), "10 minutes"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-        .select(col("window.start").as("w_start"),
-          col("n_pairs"), col("l_id_sum"), col("r_id_sum"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stjwin") { (sink, ckpt) =>
+        // Real-span bound for the post-sink sentinel-window cut (1-row
+        // driver fetch, same constant traffic as the landing builders).
+        val t1 = Tables(spark, dir, "events")
+          .agg(max(col("ts"))).head().getTimestamp(0)
+        val joined = StreamingOps.timeBoundJoin(
+            fileStream(spark, left, eventLandingSchema), fileStream(spark, right, eventLandingSchema),
+            maxGap = "30 minutes", watermark = "30 minutes")
+        runToParquet(joined
+            .groupBy(window(col("l_ts"), "10 minutes"))
+            .agg(count(lit(1)).as("n_pairs"),
+              sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
+            .select(col("window.start").as("w_start"),
+              col("n_pairs"), col("l_id_sum"), col("r_id_sum")), sink, ckpt)
           // Cut at t1 + 24 h: real windows start <= t1, sentinel
           // self-pair windows land ~369 d past t1 — any constant
           // strictly between the two is a safe separator.
@@ -1207,8 +1097,8 @@ object StreamingReplayQ {
             lit(new java.sql.Timestamp(t1.getTime + 24L * 3600 * 1000)))
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("n_pairs"), col("l_id_sum"), col("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("w_start"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("w_start")
+      }
     },
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
@@ -1244,27 +1134,18 @@ object StreamingReplayQ {
     "st_window_tws_replay",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stwtws_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stwtws_ckpt").toString
-      val in = fileStream(spark, landing)
+      val in = fileStream(spark, landing, eventLandingSchema)
         .withColumn("value", cents(col("value")))
-      val q = StreamingOps.windowRollup(in,
-          window_ = "10 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stwtws") { (sink, ckpt) =>
+        runToParquet(StreamingOps.windowRollup(in,
+            window_ = "10 minutes", watermark = "30 minutes"), sink, ckpt)
           .filter(!(col("event_type") <=> "sentinel"))
           .groupBy(col("event_type"))
           .agg(max(struct(col("n_windows"), col("ev_total"), col("cents_total"))).as("s"))
           .select(col("event_type"), col("s.n_windows").as("n_windows"),
             col("s.ev_total").as("ev_total"), col("s.cents_total").as("cents_total"))
-          .coalesce(1).sortWithinPartitions("event_type"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("event_type")
+      }
     }},
     Some("""SELECT event_type,
            |  COUNT(DISTINCT time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP))) AS n_windows,
@@ -1293,32 +1174,23 @@ object StreamingReplayQ {
     "st_lsh_dedup",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stlsh_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stlsh_ckpt").toString
       val spark2 = spark; import spark2.implicits._
       // Corpus bound (doc_id < 4000): spans both landing slices at
       // the gated scale, stays a bounded set at every decade (MakeSf
       // remaps ids upward), and keeps the oracle's DuckDB shingle CTE
       // feasible — the same reason d_minhash_lsh pins doc_id < 100.
-      val q = StreamingOps.lshBandClaims(
-          fileStream(spark, landing, docLandingSchema).filter(col("doc_id") < 4000)
-            .as[graft.streaming.DocIn])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val docs = fileStream(spark, landing, docLandingSchema).filter(col("doc_id") < 4000)
+        .as[graft.streaming.DocIn]
+      replay("stlsh") { (sink, ckpt) =>
+        runToParquet(StreamingOps.lshBandClaims(docs), sink, ckpt)
           .filter(col("owner_doc") < col("doc_id"))
           .groupBy(col("doc_id"), col("owner_doc"))
           .agg(countDistinct(col("band")).as("n_bands"))
           .filter(col("n_bands") >= 3)
           .select(col("doc_id").as("dup_doc"),
             col("owner_doc").as("first_doc"), col("n_bands"))
-          .coalesce(1).sortWithinPartitions("dup_doc", "first_doc"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("dup_doc", "first_doc")
+      }
     }},
     Some {
       import graft.ops.TextHash._
@@ -1435,33 +1307,24 @@ object StreamingReplayQ {
     withConfs(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
       val lDir = wmPolicyLandingDir(spark, dir, 0)
       val rDir = wmPolicyLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory(s"graft_wmpol_${policy}_sink").toString
-      val ckpt = Files.createTempDirectory(s"graft_wmpol_${policy}_ckpt").toString
-      val t1 = Tables(spark, dir, "events")
-        .agg(max(col("ts"))).head().getTimestamp(0)
-      val l = fileStream(spark, lDir)
-        .withWatermark("ts", "30 minutes").withColumn("src", lit("l"))
-      val r = fileStream(spark, rDir)
-        .withWatermark("ts", "365 days").withColumn("src", lit("r"))
-      val q = l.unionByName(r)
-        .groupBy(window(col("ts"), "10 minutes"), col("src"))
-        .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
-        .select(col("window.start").as("w_start"), col("src"),
-          col("n_events"), col("id_sum"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay(s"wmpol_$policy") { (sink, ckpt) =>
+        val t1 = Tables(spark, dir, "events")
+          .agg(max(col("ts"))).head().getTimestamp(0)
+        val l = fileStream(spark, lDir, eventLandingSchema)
+          .withWatermark("ts", "30 minutes").withColumn("src", lit("l"))
+        val r = fileStream(spark, rDir, eventLandingSchema)
+          .withWatermark("ts", "365 days").withColumn("src", lit("r"))
+        runToParquet(l.unionByName(r)
+            .groupBy(window(col("ts"), "10 minutes"), col("src"))
+            .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
+            .select(col("window.start").as("w_start"), col("src"),
+              col("n_events"), col("id_sum")), sink, ckpt)
           .filter(col("w_start") <=
             lit(new java.sql.Timestamp(t1.getTime + 24L * 3600 * 1000)))
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("src"), col("n_events"), col("id_sum"))
-          .coalesce(1).sortWithinPartitions("w_start", "src"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("w_start", "src")
+      }
     }
 
   /** multipleWatermarkPolicy = MIN (the default) under the gate: the
@@ -1525,30 +1388,22 @@ object StreamingReplayQ {
       // st_upsert_replay, paid twice here.
       val spark = tunedStreamSession(spark0)
       val landing = landingDir(spark, dir)
-      val snap = Files.createTempDirectory("graft_stcrash_snap").toString
-      val ckpt = Files.createTempDirectory("graft_stcrash_ckpt").toString
       val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q1 = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()),
-        onBatchApplied = id =>
+      replay("stcrash") { (snap, ckpt) =>
+        def run(onBatchApplied: Long => Unit) = awaitOrStop(StreamingOps.upsertLatestSink(
+          fileStream(spark, landing, eventLandingSchema), snap, ckpt,
+          trigger = Some(Trigger.AvailableNow()), onBatchApplied = onBatchApplied))
+        val crash: Long => Unit = id =>
           if (id == 1 && !tripped.getAndSet(true))
-            throw new RuntimeException("graft-injected-crash after applying batch 1"))
-      val died =
-        try { q1.awaitTermination(); false }
-        catch { case e: Throwable if hasInjectedCrash(e) => true }
-      require(died && tripped.get(),
-        "injected crash did not kill the first run — the restart path was not exercised")
-      val q2 = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()))
-      q2.awaitTermination()
-      val latest = StreamingOps.latestSnapshot(snap)
-        .getOrElse(sys.error("no committed snapshot version after crash-replay"))
-      materializeAndClean(
-        spark.read.parquet(latest)
-          .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
-            col("event_id"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        snap, ckpt)
+            throw new RuntimeException("graft-injected-crash after applying batch 1")
+        val died =
+          try { run(crash); false }
+          catch { case e: Throwable if hasInjectedCrash(e) => true }
+        require(died && tripped.get(),
+          "injected crash did not kill the first run — the restart path was not exercised")
+        run(_ => ())
+        latestUpsertFrame(spark, snap, "crash-replay")
+      }
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | event_id, CAST(round(value*100) AS BIGINT) AS value_cents
@@ -1574,44 +1429,42 @@ object StreamingReplayQ {
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
       val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stobs_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stobs_ckpt").toString
-      val q = fileStream(spark, landing)
-        .withColumn("value_cents", cents(col("value")))
-        .observe("m",
-          count(lit(1)).as("n_rows"),
-          sum(col("value_cents")).as("cents_sum"),
-          max(col("event_id")).as("max_id"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // recentProgress is a RING BUFFER (default cap
-      // spark.sql.streaming.numRecentProgressUpdates = 100): if the
-      // landing ever produced more micro-batches than the cap, the
-      // earliest observed metrics would be silently evicted and the
-      // gated totals would under-count. Fail loudly instead: the
-      // retained progress events must cover every committed batch id
-      // from 0 contiguously (ADVICE r15).
-      val ids = q.recentProgress.toSeq.map(_.batchId).sorted
-      require(ids.nonEmpty && ids.head == 0L &&
-        ids.distinct.size == ids.distinct.max + 1,
-        s"recentProgress ring buffer truncated: batch ids $ids do not " +
-          "cover 0..max contiguously — observed totals would under-count")
-      val ms = q.recentProgress.toSeq
-        .flatMap(p => Option(p.observedMetrics.get("m")))
-      require(ms.nonEmpty, "no observed metrics surfaced in progress events")
-      val nRows = ms.map(_.getAs[Long]("n_rows")).sum
-      val centsSum = ms.flatMap(r => Option(r.getAs[java.lang.Long]("cents_sum")))
-        .map(_.longValue).sum
-      val maxId = ms.flatMap(r => Option(r.getAs[java.lang.Long]("max_id")))
-        .map(_.longValue).max
       val spark2 = spark; import spark2.implicits._
-      materializeAndClean(
-        Seq((nRows, centsSum, maxId)).toDF("n_rows", "cents_sum", "max_id"),
-        sink, ckpt)
+      replay("stobs") { (sink, ckpt) =>
+        val q = fileStream(spark, landing, eventLandingSchema)
+          .withColumn("value_cents", cents(col("value")))
+          .observe("m",
+            count(lit(1)).as("n_rows"),
+            sum(col("value_cents")).as("cents_sum"),
+            max(col("event_id")).as("max_id"))
+          .writeStream.format("parquet")
+          .option("path", sink)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        awaitOrStop(q)
+        // recentProgress is a RING BUFFER (default cap
+        // spark.sql.streaming.numRecentProgressUpdates = 100): if the
+        // landing ever produced more micro-batches than the cap, the
+        // earliest observed metrics would be silently evicted and the
+        // gated totals would under-count. Fail loudly instead: the
+        // retained progress events must cover every committed batch id
+        // from 0 contiguously (ADVICE r15).
+        val ids = q.recentProgress.toSeq.map(_.batchId).sorted
+        require(ids.nonEmpty && ids.head == 0L &&
+          ids.distinct.size == ids.distinct.max + 1,
+          s"recentProgress ring buffer truncated: batch ids $ids do not " +
+            "cover 0..max contiguously — observed totals would under-count")
+        val ms = q.recentProgress.toSeq
+          .flatMap(p => Option(p.observedMetrics.get("m")))
+        require(ms.nonEmpty, "no observed metrics surfaced in progress events")
+        val nRows = ms.map(_.getAs[Long]("n_rows")).sum
+        val centsSum = ms.flatMap(r => Option(r.getAs[java.lang.Long]("cents_sum")))
+          .map(_.longValue).sum
+        val maxId = ms.flatMap(r => Option(r.getAs[java.lang.Long]("max_id")))
+          .map(_.longValue).max
+        Seq((nRows, centsSum, maxId)).toDF("n_rows", "cents_sum", "max_id")
+      }
     },
     Some("""SELECT COUNT(*) AS n_rows,
            |  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents_sum,
@@ -1657,36 +1510,21 @@ object StreamingReplayQ {
     "st_initial_state",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
       val landing = halfLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stinit_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stinit_ckpt").toString
       val spark2 = spark; import spark2.implicits._
-      val ev = Tables(spark, dir, "events")
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
-      val mid = t0 + (t1 - t0) / 2
-      val seed = ev.filter(unix_millis(col("ts")) < mid)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("CAST(round(value * 1000000) AS BIGINT)")).as("value_micro_total"))
-        .as[graft.streaming.UserTotal]
-      val q = StreamingOps.seededRunningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event], seed)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stinit") { (sink, ckpt) =>
+        val ev = Tables(spark, dir, "events")
+        val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
+          .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
+        val mid = t0 + (t1 - t0) / 2
+        val seed = ev.filter(unix_millis(col("ts")) < mid)
           .groupBy(col("user_id"))
-          .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
-          .select(col("user_id"), col("s.n_events").as("n_events"),
-            col("s.value_micro_total").as("value_micro_total"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+          .agg(count(lit(1)).as("n_events"),
+            sum(expr("CAST(round(value * 1000000) AS BIGINT)")).as("value_micro_total"))
+          .as[graft.streaming.UserTotal]
+        latestTotals(runToParquet(StreamingOps.seededRunningTotals(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event], seed),
+            sink, ckpt, update = true))
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -1697,6 +1535,16 @@ object StreamingReplayQ {
            |FROM e GROUP BY user_id
            |HAVING COUNT(*) FILTER (WHERE h2) > 0
            |ORDER BY user_id""".stripMargin))
+
+  /** Final per-user totals off an update-mode running-totals sink: each
+    * user's monotone max(struct(n_events, value_micro_total)), followed
+    * by `extra` columns. */
+  private def latestTotals(sink: DataFrame, extra: Column*): DataFrame =
+    sink.groupBy(col("user_id"))
+      .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
+      .select(Seq(col("user_id"), col("s.n_events").as("n_events"),
+        col("s.value_micro_total").as("value_micro_total")) ++ extra: _*)
+      .coalesce(1).sortWithinPartitions("user_id")
 
   /** First-half landing for the state-migration key: only events strictly
     * before the full span's epoch midpoint, as 2 chronological slices —
@@ -1726,44 +1574,23 @@ object StreamingReplayQ {
   }
 
   /** Completed source checkpoint for the state-migration key: one
-    * [[StreamingOps.runningTotals]] replay over the FIRST-half landing at
-    * the creating session's shuffle-partition count (the count is frozen
-    * into the checkpoint for its lifetime — that freeze is exactly the
-    * operational wall the migration key exists to climb), RocksDB
-    * provider (TWS requires it), sink discarded. Built per invocation in
-    * a scratch dir and NEVER moved: unlike the dedup checkpoint fixture
-    * ([[StateReadQ.ckptFixture]]), a transformWithState checkpoint
-    * records ABSOLUTE state-schema file paths in its operator metadata,
-    * so a renamed/published TWS checkpoint fails its own schema lookup
-    * on read-back. Caller deletes the returned dir. */
-  private def migSourceCkpt(spark: SparkSession, dir: String): String = {
-    val landing = half1LandingDir(spark, dir)
-    val ckpt = Files.createTempDirectory("graft_mig_src_ckpt")
-    val sink = Files.createTempDirectory("graft_mig_src_sink")
-    // A failure of the seed stream itself must not strand the RocksDB
-    // checkpoint + sink scratch (ADVICE r16: the caller's cleanup only
-    // covers failures AFTER this returns, so repeated failed attempts
-    // grew /tmp by a full checkpoint each).
-    try {
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.runningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink.toString); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } catch {
-      case e: Throwable =>
-        deleteRecursively(ckpt.toFile)
-        deleteRecursively(sink.toFile)
-        throw e
-    }
-    deleteRecursively(sink.toFile)
-    ckpt.toString
+    * [[StreamingOps.runningTotals]] replay over the FIRST-half landing
+    * into `ckpt` at the creating session's shuffle-partition count (the
+    * count is frozen into the checkpoint for its lifetime — that freeze
+    * is exactly the operational wall the migration key exists to climb),
+    * RocksDB provider (TWS requires it), `sink` never read. Built per
+    * invocation in dirs the caller's [[replay]] owns and NEVER moved:
+    * unlike the dedup checkpoint fixture ([[StateReadQ.ckptFixture]]), a
+    * transformWithState checkpoint records ABSOLUTE state-schema file
+    * paths in its operator metadata, so a renamed/published TWS
+    * checkpoint fails its own schema lookup on read-back. */
+  private def migSourceCkpt(spark: SparkSession, dir: String,
+                            sink: String, ckpt: String): Unit = withRocksDb(spark) {
+    val spark2 = spark; import spark2.implicits._
+    runToSink(StreamingOps.runningTotals(
+        fileStream(spark, half1LandingDir(spark, dir), eventLandingSchema)
+          .as[graft.streaming.Event]),
+      sink, ckpt, update = true)
   }
 
   /** 8-partition session clone for the migration TARGET — deliberately
@@ -1805,13 +1632,14 @@ object StreamingReplayQ {
     "st_state_repartition",
     (spark0, dir) => {
       val src = tunedStreamSession(spark0) // 4-partition source world
-      val srcCkpt = withRocksDb(src) { migSourceCkpt(src, dir) }
       val spark = migStreamSession(spark0) // 8-partition target world
       // The source checkpoint is rebuilt EVERY invocation (it cannot be
-      // a fixture — TWS metadata pins absolute paths), so a failure
-      // between here and materializeAndClean must not strand a full
-      // RocksDB checkpoint per attempt: delete it on the way out.
-      try withRocksDb(spark) {
+      // a fixture — TWS metadata pins absolute paths); replay deletes it
+      // with the target's dirs, on failure as on success.
+      val srcSink = Files.createTempDirectory("graft_stmig_src_sink").toString
+      val srcCkpt = Files.createTempDirectory("graft_stmig_src_ckpt").toString
+      withRocksDb(spark) { replay("stmig", srcSink, srcCkpt) { (sink, ckpt) =>
+        migSourceCkpt(src, dir, srcSink, srcCkpt)
         val srcParts = spark.read.format("state-metadata").load(srcCkpt)
           .select(col("numPartitions")).head().getInt(0)
         require(srcParts == 4,
@@ -1824,35 +1652,15 @@ object StreamingReplayQ {
             col("value.totalMicro").as("value_micro_total"))
           .as[graft.streaming.UserTotal]
         val landing = halfLandingDir(spark, dir)
-        val sink = Files.createTempDirectory("graft_stmig_sink").toString
-        val ckpt = Files.createTempDirectory("graft_stmig_ckpt").toString
-        val q = StreamingOps.seededRunningTotals(
-            fileStream(spark, landing).as[graft.streaming.Event], seed)
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-            b.write.mode("append").parquet(sink); ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val out = runToParquet(StreamingOps.seededRunningTotals(
+            fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event], seed),
+          sink, ckpt, update = true)
         val tgtParts = spark.read.format("state-metadata").load(ckpt)
           .select(col("numPartitions")).head().getInt(0)
         require(tgtParts == 8,
           s"migrated checkpoint has $tgtParts state partitions, expected 8")
-        materializeAndClean(
-          spark.read.parquet(sink)
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
-            .select(col("user_id"), col("s.n_events").as("n_events"),
-              col("s.value_micro_total").as("value_micro_total"),
-              lit(tgtParts.toLong).as("n_state_parts"))
-            .coalesce(1).sortWithinPartitions("user_id"),
-          sink, ckpt, srcCkpt)
-      } catch {
-        case e: Throwable =>
-          deleteRecursively(new java.io.File(srcCkpt)); throw e
-      }
+        latestTotals(out, lit(tgtParts.toLong).as("n_state_parts"))
+      }}
     },
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -1889,39 +1697,35 @@ object StreamingReplayQ {
         RocksDbChangelog -> "true",
         "spark.sql.streaming.stateStore.encodingFormat" -> "avro") {
       val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stevo_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stevo_ckpt").toString
       val spark2 = spark; import spark2.implicits._
       val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def run(v2: Boolean, crashAfter: Option[Long]) = {
-        val ds = fileStream(spark, landing).as[graft.streaming.Event]
-        val out = if (v2) StreamingOps.evoTotalsV2(ds) else StreamingOps.evoTotalsV1(ds)
-        out.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.EvoOut], id: Long) =>
-            b.write.mode("append").parquet(sink)
-            if (crashAfter.contains(id) && !tripped.getAndSet(true))
-              throw new RuntimeException(s"graft-injected-crash after applying batch $id")
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      val q1 = run(v2 = false, crashAfter = Some(1L))
-      val died =
-        try { q1.awaitTermination(); false }
-        catch { case e: Throwable if hasInjectedCrash(e) => true }
-      require(died && tripped.get(),
-        "injected crash did not kill the v1 run — the evolve path was not exercised")
-      val q2 = run(v2 = true, crashAfter = None)
-      q2.awaitTermination()
-      materializeAndClean(
+      replay("stevo") { (sink, ckpt) =>
+        def run(v2: Boolean, crashAfter: Option[Long]): Unit = {
+          val ds = fileStream(spark, landing, eventLandingSchema).as[graft.streaming.Event]
+          val out = if (v2) StreamingOps.evoTotalsV2(ds) else StreamingOps.evoTotalsV1(ds)
+          awaitOrStop(out.writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (b: Dataset[graft.streaming.EvoOut], id: Long) =>
+              b.write.mode("append").parquet(sink)
+              if (crashAfter.contains(id) && !tripped.getAndSet(true))
+                throw new RuntimeException(s"graft-injected-crash after applying batch $id")
+            }
+            .trigger(Trigger.AvailableNow())
+            .start())
+        }
+        val died =
+          try { run(v2 = false, crashAfter = Some(1L)); false }
+          catch { case e: Throwable if hasInjectedCrash(e) => true }
+        require(died && tripped.get(),
+          "injected crash did not kill the v1 run — the evolve path was not exercised")
+        run(v2 = true, crashAfter = None)
         spark.read.parquet(sink)
           .groupBy(col("user_id"))
           .agg(max(struct(col("n_events"), col("late_micro"))).as("s"))
           .select(col("user_id"), col("s.n_events").as("n_events"),
             col("s.late_micro").as("late_micro"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+          .coalesce(1).sortWithinPartitions("user_id")
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,

@@ -51,7 +51,8 @@ object StreamScaleProbe {
       val right = graft.queries.StreamingReplayQ.joinLandingDir(spark, dir, 1)
       val sink = Files.createTempDirectory("graft_ssp_join_sink").toString
       val ckpt = Files.createTempDirectory("graft_ssp_join_ckpt").toString
-      def fs(d: String) = graft.queries.StreamingReplayQ.fileStream(spark, d)
+      def fs(d: String) = graft.queries.StreamingReplayQ.fileStream(spark, d,
+        graft.queries.StreamingReplayQ.eventLandingSchema)
       val q = graft.streaming.StreamingOps.timeBoundJoin(fs(left), fs(right),
           maxGap = "30 minutes", watermark = "3650 days")
         .writeStream.format("parquet").option("path", sink)
@@ -69,7 +70,8 @@ object StreamScaleProbe {
       val sink = Files.createTempDirectory("graft_ssp_tws_sink").toString
       val ckpt = Files.createTempDirectory("graft_ssp_tws_ckpt").toString
       val q = graft.streaming.StreamingOps.runningTotals(
-          graft.queries.StreamingReplayQ.fileStream(spark, landing)
+          graft.queries.StreamingReplayQ.fileStream(spark, landing,
+              graft.queries.StreamingReplayQ.eventLandingSchema)
             .as[graft.streaming.Event])
         .writeStream.outputMode("update")
         .option("checkpointLocation", ckpt)

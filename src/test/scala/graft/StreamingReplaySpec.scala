@@ -32,6 +32,33 @@ class StreamingReplaySpec extends SparkSpec {
     assert(ids.length == nEvents, "dedup output != original event count")
   }
 
+  test("replay deletes its sink and checkpoint and leaves no stream running when the run fails") {
+    import queries.StreamingReplayQ._
+    // two one-file micro-batches: even event_ids commit in batch 0, the
+    // first odd one fails batch 1 after the sink and checkpoint hold files
+    val landing = java.nio.file.Files.createTempDirectory("graft_replayfail_landing")
+    try {
+      val ev = Tables(spark, dir, "events")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      writeSlice(landing, 0, ev.filter(pmod(col("event_id"), lit(2)) === 0))
+      writeSlice(landing, 1, ev.filter(pmod(col("event_id"), lit(2)) === 1))
+      val failing = fileStream(spark, landing.toString, eventLandingSchema)
+        .withColumn("even", assert_true(pmod(col("event_id"), lit(2)) === 0))
+      var dirs = Seq.empty[String]
+      val err = intercept[Exception] {
+        replay("sttestfail") { (sink, ckpt) =>
+          dirs = Seq(sink, ckpt)
+          runToParquet(failing, sink, ckpt)
+        }
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("pmod")), err)
+      assert(dirs.size == 2)
+      dirs.foreach(d => assert(!new java.io.File(d).exists(), s"$d survived the failed replay"))
+      assert(spark.streams.active.isEmpty)
+    } finally queries.Fixtures.deleteRecursively(landing.toFile)
+  }
+
   test("st_timer_sessions emits each user's final session (no-data flush batch is live)") {
     // ADVICE r17 tripwire: since the r17 sentinel collapse, every final
     // window/session/unmatched-row flush rides the ONE no-data

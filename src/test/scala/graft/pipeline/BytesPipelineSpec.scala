@@ -78,6 +78,15 @@ class BytesPipelineSpec extends SparkSpec {
   private def partFiles(dir: String): Seq[java.io.File] =
     Option(new java.io.File(dir).listFiles).toSeq.flatten.filter(_.getName.startsWith("part-"))
 
+  /** The distinct Parquet footer schemas of a table's part files. */
+  private def footerSchemas(dir: String): Set[org.apache.parquet.schema.MessageType] =
+    partFiles(dir).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }.toSet
+
   test("splittable run: one task per split, adversarial files sized from the forward count") {
     // 120 packets in range, every third one forward, over ~12 splits
     val recs = (0 until 120).map { i =>
@@ -98,6 +107,10 @@ class BytesPipelineSpec extends SparkSpec {
     for ((a, b) <- Seq(r.dataPath -> wholeData, r.advPath.get -> wholeAdv.get)) {
       val (x, y) = (spark.read.parquet(a), spark.read.parquet(b))
       assert(x.schema == y.schema && x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, a)
+      // Spark reads every Parquet column back as nullable, so compare the
+      // files' own schemas: a non-Spark reader sees `required` vs `optional`
+      assert(footerSchemas(a) == footerSchemas(b) && footerSchemas(a).size == 1,
+        s"$a: ${footerSchemas(a)} vs ${footerSchemas(b)}")
     }
     assert(spark.read.parquet(r.advPath.get).count() == 40)
     // every split is its own task, and so its own data file ...

@@ -61,7 +61,8 @@ class WatermarkPushdownSpec extends SparkSpec {
       (5L, T0 + 13 * Minute), (7L, T0 + 26 * Minute)), sentinelIdBase = -20L)
     val sink = Files.createTempDirectory("graft_wmpd_sink").toString
     val ckpt = Files.createTempDirectory("graft_wmpd_ckpt").toString
-    def fs(d: String) = graft.queries.StreamingReplayQ.fileStream(spark, d)
+    def fs(d: String) = graft.queries.StreamingReplayQ.fileStream(spark, d,
+      graft.queries.StreamingReplayQ.eventLandingSchema)
     val joined = StreamingOps.timeBoundJoin(fs(left), fs(right),
       maxGap = "30 minutes", watermark = "30 minutes")
     val filtered = if (inStreamFilter) joined.filter(col("user_id") >= 0) else joined

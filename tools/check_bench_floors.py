@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Bench floor regression gate: diff a fresh BENCH_local.json against the
-previously committed one and fail loudly when any per-query floor
+committed floor map (BENCH_floors.json, written by
+tools/merge_bench_floors.py) and fail loudly when any per-query floor
 regressed by more than the threshold.
 
 The comparator is the per-query FLOOR — min over all samples (Bench's
@@ -10,46 +11,69 @@ suite totals and individual passes, but a floor that rises across rounds
 means the PLAN got worse (new shuffle, lost pushdown, broken broadcast),
 which should surface in-round rather than at judging (BASELINE.md).
 
-Usage: python3 tools/check_bench_floors.py <old_bench.json> <new_bench.json> \
+Usage: python3 tools/check_bench_floors.py [<old_bench.json>] <new_bench.json> \
            [ratio_threshold=1.5] [abs_floor_s=0.25]
+
+The old side defaults to BENCH_floors.json at the repo root.
 
 A regression needs BOTH new/old > ratio_threshold AND new-old >
 abs_floor_s: sub-quarter-second queries jitter by whole multiples on a
 shared host without any plan change. Exit 1 iff regressions exist.
 """
 import json
+import os
 import sys
+
+DEFAULT_OLD = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "..", "BENCH_floors.json")
 
 
 def load_floors(path):
+    with open(path) as f:
+        return floors_from_lines(f, path)
+
+
+def floors_from_lines(lines, source):
     """BENCH_local.json is JSONL: line 1 has the per-query suite-min map,
     a later line carries isolated_floors for the slowest set (deeper
     re-sampled minima — prefer them where present)."""
     queries, isolated = {}, {}
-    with open(path) as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                rec = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if "queries" in rec and isinstance(rec["queries"], dict):
-                queries.update(rec["queries"])
-            if "isolated_floors" in rec:
-                isolated.update(rec["isolated_floors"])
+    for line in lines:
+        line = line.strip()
+        if not line:
+            continue
+        try:
+            rec = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if not isinstance(rec, dict):
+            continue
+        if "queries" in rec and isinstance(rec["queries"], dict):
+            queries.update(rec["queries"])
+        if "isolated_floors" in rec:
+            isolated.update(rec["isolated_floors"])
     if not queries:
-        sys.exit(f"error: no per-query map found in {path}")
+        sys.exit(f"error: no per-query map found in {source}")
     return {k: min(v, isolated.get(k, v)) for k, v in queries.items()}
 
 
+def is_number(s):
+    try:
+        float(s)
+        return True
+    except ValueError:
+        return False
+
+
 def main():
-    if len(sys.argv) < 3:
+    args = sys.argv[1:]
+    if not args:
         sys.exit(__doc__)
-    old_path, new_path = sys.argv[1], sys.argv[2]
-    ratio_thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-    abs_thr = float(sys.argv[4]) if len(sys.argv) > 4 else 0.25
+    if len(args) == 1 or is_number(args[1]):
+        args = [DEFAULT_OLD] + args
+    old_path, new_path = args[0], args[1]
+    ratio_thr = float(args[2]) if len(args) > 2 else 1.5
+    abs_thr = float(args[3]) if len(args) > 3 else 0.25
     old, new = load_floors(old_path), load_floors(new_path)
 
     added = sorted(set(new) - set(old))
