@@ -52,14 +52,21 @@ object BytesPipeline {
     * [[graft.pcap.Packet]]) — lets callers interpose e.g. an `observe`
     * node between decode and the range filter. */
   def featuresDf(packets: DataFrame, cfg: Config): DataFrame =
+    vectorize(inRangeLabeled(packets, cfg), cfg)
+
+  /** [[featuresDf]] before vectorizing: packets in range, labeled, with
+    * their `payload`. */
+  private def inRangeLabeled(packets: DataFrame, cfg: Config): DataFrame =
     packets
       .filter(RangeFilter.inRanges(
         col("timestamp"),
         cfg.rangesToExtract.map { case (lo, hi) => (lit(lo), lit(hi)) }))
       .withColumn("label",
         RuleLabeler.labelCol(col("timestamp"), col("src_ip"), col("dst_ip"), cfg.rules))
-      .withColumn("features", packet_vector(col("payload"), cfg.width))
-      .drop("payload")
+
+  /** `payload` -> `features` float32[width], `payload` dropped. */
+  private def vectorize(df: DataFrame, cfg: Config): DataFrame =
+    df.withColumn("features", packet_vector(col("payload"), cfg.width)).drop("payload")
 
   /** The sink's metadata columns, in the reference's order (:183-184). */
   private val MetaCols =
@@ -89,27 +96,69 @@ object BytesPipeline {
   private def sinkFrame(df: DataFrame, cfg: Config): DataFrame =
     if (cfg.widen) widen(df, cfg.width) else df
 
+  /** Rows per sink file: ~128 MiB of floats (the default split size), so
+    * 22,002 rows at width 1525. */
+  private[pipeline] def rowsPerFile(width: Int): Long =
+    math.max(1L, PcapSource.DefaultSplitBytes / (width * 4L))
+
+  /** Tasks for `runAccounted`'s data write: one per core, or one per
+    * default split of capture when that is more, and never more than the
+    * `p` input partitions. This is Spark's own file-source packing (bytes
+    * per core, capped at a 128 MiB split), so only an over-split input is
+    * packed: at default splits the bound is `p`, and a 100 TB run keeps one
+    * task per split. */
+  private[pipeline] def dataTasks(p: Int, captureBytes: Long, cores: Int): Int = {
+    val split = PcapSource.DefaultSplitBytes
+    val byBytes = (captureBytes + split - 1) / split
+    math.max(1L, math.min(p.toLong, math.max(cores.toLong, byBytes))).toInt
+  }
+
+  /** Total bytes of the captures `paths` name (globs and directories
+    * included), from file statuses: no job. */
+  private def captureBytes(spark: SparkSession, paths: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.iterator.flatMap { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      val fs = hp.getFileSystem(conf)
+      Option(fs.globStatus(hp)).toSeq.flatten.map(s => fs.getContentSummary(s.getPath).getLength)
+    }.sum
+  }
+
+  /** One sink table: `df` widened when `cfg.widen`, written by `tasks`
+    * tasks (coalesced above the widen, so no shuffle), and no file over
+    * [[rowsPerFile]] rows. */
+  private def writeTable(df: DataFrame, path: String, tasks: Option[Int], cfg: Config): Unit = {
+    val frame = sinkFrame(df, cfg)
+    tasks.fold(frame)(frame.coalesce)
+      .write.option("maxRecordsPerFile", rowsPerFile(cfg.width))
+      .mode("overwrite").parquet(path)
+  }
+
   /** The dual sink (:110-119): all of `labeled` to `dataPath`, its forward
     * rows to `advPath` only when there are any (:115-117). An `observe`
     * node on the data write, which holds every forward row, counts them:
-    * no extra job, and no empty table written and then deleted. The count
-    * also sizes the adversarial table, one file per ~128 MiB of floats (the
-    * default split size), because a 1532-column Parquet file costs ~0.4 MB
-    * of footer and dictionaries however few rows it holds. Returns
-    * `Some(advPath)` iff written. */
+    * no extra job, and no empty table written and then deleted.
+    *
+    * A 1532-column Parquet file costs ~0.4 MB of footer, column-chunk
+    * metadata and dictionaries however few rows it holds, so both tables
+    * are sized, by one rule: no file holds more than [[rowsPerFile]] rows.
+    * The data table is written by `tasks` tasks when given (else one
+    * per partition of `labeled`); the adversarial table by
+    * `ceil(nFwd / rowsPerFile)` tasks, from the observed count. On
+    * flagbench `flagship_wide` (3000 packets, 8 splits, `local[4]`, 4-core
+    * host) the data table went from 8 files to 4, and the median written
+    * size from 10.68 to 8.25 MB over ten paired runs.
+    * Returns `Some(advPath)` iff written. */
   private def writeDual(labeled: DataFrame, dataPath: String, advPath: String,
-                        cfg: Config): Option[String] = {
+                        cfg: Config, tasks: Option[Int]): Option[String] = {
     val fwd = forwardMask(cfg.rules)
     val obs = org.apache.spark.sql.Observation()
-    sinkFrame(labeled.observe(obs, count(when(fwd, 1)).as("fwd")), cfg)
-      .write.mode("overwrite").parquet(dataPath)
+    writeTable(labeled.observe(obs, count(when(fwd, 1)).as("fwd")), dataPath, tasks, cfg)
     val nFwd = obs.get("fwd").asInstanceOf[Long]
     if (nFwd == 0L) None
     else {
-      val fileBytes = PcapSource.DefaultSplitBytes
-      val files = math.max(1L, (nFwd * cfg.width * 4L + fileBytes - 1) / fileBytes)
-      sinkFrame(labeled.filter(fwd).coalesce(files.toInt), cfg)
-        .write.mode("overwrite").parquet(advPath)
+      val rows = rowsPerFile(cfg.width)
+      writeTable(labeled.filter(fwd), advPath, Some(((nFwd + rows - 1) / rows).toInt), cfg)
       Some(advPath)
     }
   }
@@ -119,6 +168,11 @@ object BytesPipeline {
     * engine allows one sink per query; foreachBatch gives the dual write
     * the batch path has, with the same persist-once shape). Append-only
     * parquet, exactly-once per input file via the checkpoint log.
+    *
+    * A batch's data write keeps the batch's own partitioning: the
+    * `binaryFile` source already packs a trigger's files into tasks by
+    * bytes per core, capped at `spark.sql.files.maxPartitionBytes`, which is
+    * the packing [[runAccounted]] applies to its splits.
     */
   /** @param availableNow true = `Trigger.AvailableNow`: process every
     *        file present, then stop — the scheduled-incremental mode
@@ -144,7 +198,7 @@ object BytesPipeline {
         // no forward rows touches no adversarial path.
         val labeled = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try writeDual(labeled, s"$outDir/data/batch_id=$batchId",
-          s"$outDir/adversarial/batch_id=$batchId", cfg)
+          s"$outDir/adversarial/batch_id=$batchId", cfg, tasks = None)
         finally labeled.unpersist()
         ()
       }
@@ -221,8 +275,8 @@ object BytesPipeline {
 
   /** Run end-to-end: returns (dataPath, Some(advPath) if any adversarial
     * rows), both inside the newly committed snapshot dir. Two sinks share
-    * one persisted upstream so decode+vectorize run once (:110-119 writes
-    * both tables from one in-memory chunk).
+    * one persisted upstream so decode runs once (:110-119 writes both
+    * tables from one in-memory chunk).
     */
   def run(spark: SparkSession, pcapPaths: Seq[String], outDir: String, cfg: Config)
       : (String, Option[String]) = {
@@ -230,7 +284,16 @@ object BytesPipeline {
     (r.dataPath, r.advPath)
   }
 
-  /** [[run]] plus ingest accounting (see [[RunResult]]). */
+  /** [[run]] plus ingest accounting (see [[RunResult]]).
+    *
+    * The data write runs in [[dataTasks]]`(P, captureBytes, cores)` tasks:
+    * `P` is the partition count of the planned scan, `captureBytes` the
+    * captures' size from file statuses. Neither runs a job, and neither
+    * plans a frame that carries the ingest `Observation`: sizing from
+    * `labeled.rdd.getNumPartitions` completed it with 0 packets before the
+    * data write ran. `P` comes from the scan's `QueryExecution`, not from
+    * `Dataset.rdd`, which in Spark 4 wraps the planning in a SQL execution
+    * of its own that every query listener sees. */
   def runAccounted(spark: SparkSession, pcapPaths: Seq[String], outDir: String, cfg: Config)
       : RunResult = {
     val packets =
@@ -243,13 +306,24 @@ object BytesPipeline {
     val observed = packets.toDF().observe(obs,
       count(lit(1)).as("packets"),
       count(when(col("timestamp") === 0.0, 1)).as("no_ts_packets"))
-    val labeled = featuresDf(observed, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    // Sized from the unobserved `packets`, never from `labeled` (see above).
+    val tasks = dataTasks(packets.queryExecution.toRdd.getNumPartitions,
+      captureBytes(spark, pcapPaths), spark.sparkContext.defaultParallelism)
+    // Persisted before vectorizing: a payload (at most one frame) caches in
+    // a quarter or less of the space of its `width` floats. Cached as
+    // floats, each split's column buffer passed 1 MiB, so G1 allocated it
+    // straight into the old generation, where it stayed until unpersist;
+    // on flagbench `flagship_wide` that set off extra concurrent cycles and
+    // mixed collections in some runs and not others. Each sink vectorizes
+    // the cached payloads itself; the adversarial one only its forward rows.
+    val cached = inRangeLabeled(observed, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    val labeled = vectorize(cached, cfg)
     try {
       val prev = publishedVersions(spark, outDir)
       val v = (prev ++ stagedVersions(spark, outDir)).foldLeft(0L)(math.max) + 1
       val stage = s"$outDir/v=$v"
       val dataPath = s"$stage/data"
-      val advPath = writeDual(labeled, dataPath, s"$stage/adversarial", cfg)
+      val advPath = writeDual(labeled, dataPath, s"$stage/adversarial", cfg, Some(tasks))
       // COMMIT: the snapshot becomes visible in one atomic file create.
       val (fs, _) = fsOf(spark, outDir)
       fs.create(new org.apache.hadoop.fs.Path(outDir, s"$MarkerPrefix$v"), false).close()
@@ -271,6 +345,6 @@ object BytesPipeline {
             "ts=0.0) and fail every time-range rule; if the capture is SPB-heavy " +
             "the published snapshot may be empty.")
       RunResult(dataPath, advPath, nPackets, nNoTs)
-    } finally labeled.unpersist()
+    } finally cached.unpersist()
   }
 }

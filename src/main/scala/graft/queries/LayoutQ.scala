@@ -18,6 +18,16 @@ object LayoutQ {
   def tmp(spark: org.apache.spark.sql.SparkSession, name: String, dir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_${spark.sparkContext.applicationId}"
 
+  /** Registers a scratch table written under [[tmp]] for recursive
+    * deletion when the JVM exits, so no session strands it, and returns its
+    * path. Hadoop ignores a path that does not exist yet, so this runs
+    * after the write; registering again on a later reuse is a no-op. */
+  private def deleteOnExit(spark: org.apache.spark.sql.SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    path
+  }
+
   /** Small-file compaction. Streaming ingestion leaves thousands of tiny
     * files per partition; each costs a NameNode/listing round-trip, a
     * footer read, and a task — at 100 TB the file COUNT, not the byte
@@ -44,8 +54,8 @@ object LayoutQ {
           .select(col("l_orderkey"), col("l_returnflag"), cents(col("l_extendedprice")).as("price_cents"))
           .repartition(64).write.mode("overwrite").parquet(small)
       }
-      spark.read.parquet(small).repartition(4).write.mode("overwrite").parquet(big)
-      spark.read.parquet(big)
+      spark.read.parquet(deleteOnExit(spark, small)).repartition(4).write.mode("overwrite").parquet(big)
+      spark.read.parquet(deleteOnExit(spark, big))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_cents"))
         .orderBy("l_returnflag")
@@ -74,6 +84,7 @@ object LayoutQ {
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"),
           col("o_orderstatus").as("status"))
         .write.mode("overwrite").parquet(s"$path/v=2")
+      deleteOnExit(spark, path)
       spark.read.option("mergeSchema", "true").parquet(s"$path/v=1", s"$path/v=2")
         .groupBy(coalesce(col("status"), lit("<pre-schema>")).as("status"))
         .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_cents"))
@@ -123,7 +134,7 @@ object LayoutQ {
           .option("parquet.block.size", 16 * 1024)
           .parquet(path)
       }
-      spark.read.parquet(path)
+      spark.read.parquet(deleteOnExit(spark, path))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_cents"))
         .orderBy("l_returnflag")
@@ -160,7 +171,7 @@ object LayoutQ {
           .repartition(col("flag"))
           .write.mode("overwrite").partitionBy("flag").parquet(path)
       }
-      spark.read.parquet(path)
+      spark.read.parquet(deleteOnExit(spark, path))
         .select(col("price_cents"),
           regexp_extract(col("_metadata.file_path"), "flag=([^/]+)/", 1).as("path_flag"),
           col("_metadata.file_name").as("fn"),

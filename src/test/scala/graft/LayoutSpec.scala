@@ -44,15 +44,17 @@ class LayoutSpec extends SparkSpec {
     // contrast: the same data written with the default block size is one
     // row group per file — the layout whose scan parallelism cannot
     // exceed the file count no matter what maxPartitionBytes says
-    val ctrl = java.nio.file.Files.createTempDirectory("graft_rg_ctrl").toString
-    import org.apache.spark.sql.functions._
-    import graft.ops.ColumnOps._
-    Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_returnflag"), cents(col("l_extendedprice")).as("price_cents"))
-      .repartition(2).write.mode("overwrite").parquet(ctrl)
-    val (cFiles, cGroups) = rowGroups(ctrl)
-    assert(cGroups == cFiles,
-      s"default write should be one row group per file here (got $cGroups groups / $cFiles files)")
+    withTempDir("graft_rg_ctrl") { c =>
+      val ctrl = c.toString
+      import org.apache.spark.sql.functions._
+      import graft.ops.ColumnOps._
+      Tables(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_returnflag"), cents(col("l_extendedprice")).as("price_cents"))
+        .repartition(2).write.mode("overwrite").parquet(ctrl)
+      val (cFiles, cGroups) = rowGroups(ctrl)
+      assert(cGroups == cFiles,
+        s"default write should be one row group per file here (got $cGroups groups / $cFiles files)")
+    }
   }
 
   test("scan_evolve surfaces pre-schema rows under the null-status bucket") {

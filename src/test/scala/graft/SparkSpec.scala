@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` on a fresh temp dir named `prefix…`, then deletes the dir
+    * and everything in it, also when `body` fails. */
+  def withTempDir[T](prefix: String)(body: java.io.File => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir) finally graft.queries.Fixtures.deleteRecursively(dir)
+  }
 }
 
 object SparkSpec {

@@ -14,16 +14,18 @@ class RowGroupAuditSpec extends SparkSpec {
 
   test("audit accounts for every row and every data file, from footers alone") {
     val s = spark; import s.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_rgspec").toString
-    val df = (1L to 5000L).toDF("id").withColumn("pad", lpad(col("id").cast("string"), 64, "x"))
-    df.repartition(2).write.option("parquet.block.size", 32768)
-      .mode("overwrite").parquet(out)
-    val audit = RowGroupAudit.audit(spark, out).collect()
-    assert(audit.map(_.getLong(2)).sum == 5000L, "footer rows != written rows")
-    assert(audit.length == 2, s"expected 2 data files, audit saw ${audit.length}")
-    assert(audit.forall(_.getLong(1) >= 2),
-      s"32KB block target should split 2500x72B rows into multiple groups: ${audit.toSeq}")
-    assert(audit.forall(r => r.getLong(3) <= r.getLong(2)), "max_rg_rows > n_rows")
+    withTempDir("graft_rgspec") { d =>
+      val out = d.toString
+      val df = (1L to 5000L).toDF("id").withColumn("pad", lpad(col("id").cast("string"), 64, "x"))
+      df.repartition(2).write.option("parquet.block.size", 32768)
+        .mode("overwrite").parquet(out)
+      val audit = RowGroupAudit.audit(spark, out).collect()
+      assert(audit.map(_.getLong(2)).sum == 5000L, "footer rows != written rows")
+      assert(audit.length == 2, s"expected 2 data files, audit saw ${audit.length}")
+      assert(audit.forall(_.getLong(1) >= 2),
+        s"32KB block target should split 2500x72B rows into multiple groups: ${audit.toSeq}")
+      assert(audit.forall(r => r.getLong(3) <= r.getLong(2)), "max_rg_rows > n_rows")
+    }
   }
 
   test("audit recurses a partitioned directory tree via the Hadoop FS layer") {
@@ -33,15 +35,16 @@ class RowGroupAuditSpec extends SparkSpec {
     // value — must be fully covered, while _SUCCESS markers and any
     // file under a hidden/_-prefixed directory stay excluded.
     val s = spark; import s.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_rgspec_part").toString
-    val df = (1L to 3000L).toDF("id").withColumn("part", pmod(col("id"), lit(3)))
-    df.repartition(1).write.partitionBy("part").mode("overwrite").parquet(out)
-    val audit = RowGroupAudit.audit(spark, out).collect()
-    assert(audit.map(_.getLong(2)).sum == 3000L,
-      s"partitioned-tree footer rows != written rows: ${audit.toSeq}")
-    assert(audit.length == 3,
-      s"expected 3 data files (one per partition dir), audit saw ${audit.length}")
-    graft.queries.Fixtures.deleteRecursively(new java.io.File(out))
+    withTempDir("graft_rgspec_part") { d =>
+      val out = d.toString
+      val df = (1L to 3000L).toDF("id").withColumn("part", pmod(col("id"), lit(3)))
+      df.repartition(1).write.partitionBy("part").mode("overwrite").parquet(out)
+      val audit = RowGroupAudit.audit(spark, out).collect()
+      assert(audit.map(_.getLong(2)).sum == 3000L,
+        s"partitioned-tree footer rows != written rows: ${audit.toSeq}")
+      assert(audit.length == 3,
+        s"expected 3 data files (one per partition dir), audit saw ${audit.length}")
+    }
   }
 
   test("the engine's own sink writers stay row-group compliant") {

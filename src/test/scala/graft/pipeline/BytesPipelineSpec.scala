@@ -6,7 +6,6 @@ import graft.pcap.{Fixtures, PcapSource}
 import java.nio.file.Files
 import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end flagship test: synthesize a pcap on disk, run the full
@@ -33,46 +32,48 @@ class BytesPipelineSpec extends SparkSpec {
     rangesToExtract = Seq((100.0, 300.0)),
     width = width)
 
-  private def runPipeline(): (String, Option[String]) = {
-    val dir = Files.createTempDirectory("graft-pipe").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "cap.pcap")
-    Files.write(pcap.toPath, pcapOf(frames: _*))
-    BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", cfg)
-  }
+  /** Runs the pipeline on `frames` in a fresh temp dir, then `body` on
+    * the committed (dataPath, advPath). */
+  private def withPipelineRun[T](body: ((String, Option[String])) => T): T =
+    withTempDir("graft-pipe") { dir =>
+      val pcap = new java.io.File(dir, "cap.pcap")
+      Files.write(pcap.toPath, pcapOf(frames: _*))
+      body(BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", cfg))
+    }
 
   test("flagship dual-sink pipeline end-to-end") {
-    val (dataPath, advPath) = runPipeline()
-    val data = spark.read.parquet(dataPath).collect()
+    withPipelineRun { case (dataPath, advPath) =>
+      val data = spark.read.parquet(dataPath).collect()
 
-    // 4 decodable packets in range (arp dropped, ts=50 filtered)
-    assert(data.length == 4)
-    val cols = spark.read.parquet(dataPath).columns
-    assert(cols.take(7).toSeq ==
-      Seq("timestamp", "src_ip", "dst_ip", "src_port", "dst_port", "protocol", "label"))
-    assert(cols.length == 7 + width && cols(7) == "byte(0)" && cols.last == s"byte(${width - 1})")
+      // 4 decodable packets in range (arp dropped, ts=50 filtered)
+      assert(data.length == 4)
+      val cols = spark.read.parquet(dataPath).columns
+      assert(cols.take(7).toSeq ==
+        Seq("timestamp", "src_ip", "dst_ip", "src_port", "dst_port", "protocol", "label"))
+      assert(cols.length == 7 + width && cols(7) == "byte(0)" && cols.last == s"byte(${width - 1})")
 
-    val byTs = data.map(r => r.getDouble(0) -> r).toMap
-    assert(byTs(120.0).getAs[String]("label") == "benign")
-    assert(byTs(130.0).getAs[String]("label") == "dos") // forward direction
-    assert(byTs(140.0).getAs[String]("label") == "dos") // bidirectional match
-    assert(byTs(260.0).getAs[String]("label") == "benign") // outside rule ts-range
+      val byTs = data.map(r => r.getDouble(0) -> r).toMap
+      assert(byTs(120.0).getAs[String]("label") == "benign")
+      assert(byTs(130.0).getAs[String]("label") == "dos") // forward direction
+      assert(byTs(140.0).getAs[String]("label") == "dos") // bidirectional match
+      assert(byTs(260.0).getAs[String]("label") == "benign") // outside rule ts-range
 
-    // anonymization visible through the widened floats: src ip bytes (offsets
-    // 12..15) are zero, yet the metadata keeps the true address
-    assert(byTs(130.0).getAs[String]("src_ip") == "10.0.0.66")
-    (12 to 15).foreach(i => assert(byTs(130.0).getAs[Float](s"byte($i)") == 0.0f))
-    // normalization: app payload of 0x7F at byte(40) -> 127/255
-    assert(math.abs(byTs(130.0).getAs[Float]("byte(40)") - 127f / 255f) < 1e-7)
-    // truncation: the 200-byte app payload overflows width=64 -> no column to see it,
-    // padding: benign 60-byte datagram zero-pads the tail
-    assert(byTs(120.0).getAs[Float](s"byte(${width - 1})") == 0.0f)
+      // anonymization visible through the widened floats: src ip bytes (offsets
+      // 12..15) are zero, yet the metadata keeps the true address
+      assert(byTs(130.0).getAs[String]("src_ip") == "10.0.0.66")
+      (12 to 15).foreach(i => assert(byTs(130.0).getAs[Float](s"byte($i)") == 0.0f))
+      // normalization: app payload of 0x7F at byte(40) -> 127/255
+      assert(math.abs(byTs(130.0).getAs[Float]("byte(40)") - 127f / 255f) < 1e-7)
+      // truncation: the 200-byte app payload overflows width=64 -> no column to see it,
+      // padding: benign 60-byte datagram zero-pads the tail
+      assert(byTs(120.0).getAs[Float](s"byte(${width - 1})") == 0.0f)
 
-    // adversarial sink = forward rows only (src in attackers & ts in rule range)
-    val adv = spark.read.parquet(advPath.get).collect()
-    assert(adv.map(_.getDouble(0)).toSeq == Seq(130.0))
-    // sized from its observed count: one row is one part file
-    assert(partFiles(advPath.get).size == 1)
+      // adversarial sink = forward rows only (src in attackers & ts in rule range)
+      val adv = spark.read.parquet(advPath.get).collect()
+      assert(adv.map(_.getDouble(0)).toSeq == Seq(130.0))
+      // sized from its observed count: one row is one part file
+      assert(partFiles(advPath.get).size == 1)
+    }
   }
 
   private def partFiles(dir: String): Seq[java.io.File] =
@@ -93,30 +94,58 @@ class BytesPipelineSpec extends SparkSpec {
       val src = if (i % 3 == 0) "10.0.0.66" else s"10.0.1.${i % 7}"
       (100.0 + i * 0.5, frame(src, "10.0.0.2", 1000 + i, 80, 6, Array.fill[Byte](i % 40)(i.toByte)))
     }
-    val dir = Files.createTempDirectory("graft-splitrun").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "cap.pcap")
-    Files.write(pcap.toPath, pcapOf(recs: _*))
-    val split = cfg.copy(splittable = true, targetSplitBytes = 1024)
-    val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 1024).size
-    assert(nSplits > 8)
+    withTempDir("graft-splitrun") { dir =>
+      val pcap = new java.io.File(dir, "cap.pcap")
+      Files.write(pcap.toPath, pcapOf(recs: _*))
+      val split = cfg.copy(splittable = true, targetSplitBytes = 1024)
+      val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 1024).size
+      assert(nSplits > 8)
 
-    val r = BytesPipeline.runAccounted(spark, Seq(pcap.getAbsolutePath), s"$dir/split", split)
-    val (wholeData, wholeAdv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/whole", cfg)
-    assert(r.ingestedPackets == 120)
-    for ((a, b) <- Seq(r.dataPath -> wholeData, r.advPath.get -> wholeAdv.get)) {
-      val (x, y) = (spark.read.parquet(a), spark.read.parquet(b))
-      assert(x.schema == y.schema && x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, a)
-      // Spark reads every Parquet column back as nullable, so compare the
-      // files' own schemas: a non-Spark reader sees `required` vs `optional`
-      assert(footerSchemas(a) == footerSchemas(b) && footerSchemas(a).size == 1,
-        s"$a: ${footerSchemas(a)} vs ${footerSchemas(b)}")
+      var r: BytesPipeline.RunResult = null
+      val plans = SinkPlans.capture(spark) {
+        r = BytesPipeline.runAccounted(spark, Seq(pcap.getAbsolutePath), s"$dir/split", split)
+      }
+      val (wholeData, wholeAdv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/whole", cfg)
+      assert(r.ingestedPackets == 120)
+      for ((a, b) <- Seq(r.dataPath -> wholeData, r.advPath.get -> wholeAdv.get)) {
+        val (x, y) = (spark.read.parquet(a), spark.read.parquet(b))
+        assert(x.schema == y.schema && x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, a)
+        // Spark reads every Parquet column back as nullable, so compare the
+        // files' own schemas: a non-Spark reader sees `required` vs `optional`
+        assert(footerSchemas(a) == footerSchemas(b) && footerSchemas(a).size == 1,
+          s"$a: ${footerSchemas(a)} vs ${footerSchemas(b)}")
+      }
+      assert(spark.read.parquet(r.advPath.get).count() == 40)
+      // the over-split data write is packed to one task, so one file, per core ...
+      val cores = spark.sparkContext.defaultParallelism
+      assert(partFiles(r.dataPath).size == math.min(nSplits, cores))
+      // ... by a coalesce above the widen: no shuffle, no wide projection
+      val sinks = plans.filter(SinkPlans.hasWiden)
+      assert(sinks.size == 2, "data and adversarial writes")
+      assert(sinks.exists(p => SinkPlans.coalescesOverWiden(p).map(_.numPartitions) == Seq(cores)),
+        sinks.mkString("\n"))
+      assert(sinks.forall(p => SinkPlans.shuffles(p).isEmpty && SinkPlans.wideProjects(p).isEmpty))
+      // ... and both read one cache of payloads, not of 1525-float vectors
+      assert(sinks.forall { p =>
+        val cols = SinkPlans.cachedColumns(p)
+        cols.contains("payload") && !cols.contains("features")
+      }, sinks.mkString("\n"))
+      // ... while 40 forward rows are far below 128 MiB: one file
+      assert(partFiles(r.advPath.get).size == 1)
     }
-    assert(spark.read.parquet(r.advPath.get).count() == 40)
-    // every split is its own task, and so its own data file ...
-    assert(partFiles(r.dataPath).size == nSplits)
-    // ... while 40 forward rows are far below 128 MiB: one file
-    assert(partFiles(r.advPath.get).size == 1)
+  }
+
+  test("sink sizing: one data task per core or per 128 MiB of capture, files capped at ~128 MiB of floats") {
+    // an over-split tiny capture is packed to the core count ...
+    assert(BytesPipeline.dataTasks(p = 13, captureBytes = 20000L, cores = 4) == 4)
+    // ... but never above its partition count
+    assert(BytesPipeline.dataTasks(p = 2, captureBytes = 20000L, cores = 4) == 2)
+    // at default splits every split keeps its task: no packing at scale
+    val split = PcapSource.DefaultSplitBytes
+    assert(BytesPipeline.dataTasks(p = 1000, captureBytes = 1000L * split, cores = 4) == 1000)
+    assert(BytesPipeline.dataTasks(p = 1000, captureBytes = 100L * split, cores = 4) == 100)
+    assert(BytesPipeline.rowsPerFile(1525) == 22002L)
+    assert(BytesPipeline.rowsPerFile(64) == 524288L)
   }
 
   /** Straight-line reimplementation of the payload contract (SURVEY §1.3)
@@ -140,46 +169,46 @@ class BytesPipelineSpec extends SparkSpec {
     val smallApp = Array.tabulate[Byte](100)(i => (i * 11 + 5).toByte) // IP len 128 < 1525
     val fBig = frame("10.0.0.66", "10.0.0.2", 666, 80, 6, bigApp)
     val fSmall = frame("10.0.0.3", "10.0.0.4", 53, 53, 17, smallApp)
-    val dir = Files.createTempDirectory("graft-golden1525").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "g.pcap")
-    Files.write(pcap.toPath, pcapOf((110.0, fBig), (120.0, fSmall)))
-    val (dataPath, _) =
-      BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", cfg.copy(width = w))
-    val rows = spark.read.parquet(dataPath).collect().map(r => r.getDouble(0) -> r).toMap
-    assert(rows.keySet == Set(110.0, 120.0))
+    withTempDir("graft-golden1525") { dir =>
+      val pcap = new java.io.File(dir, "g.pcap")
+      Files.write(pcap.toPath, pcapOf((110.0, fBig), (120.0, fSmall)))
+      val (dataPath, _) =
+        BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", cfg.copy(width = w))
+      val rows = spark.read.parquet(dataPath).collect().map(r => r.getDouble(0) -> r).toMap
+      assert(rows.keySet == Set(110.0, 120.0))
 
-    // every one of the 1525 floats, exactly — truncated and padded shapes
-    for ((f, ts) <- Seq((fBig, 110.0), (fSmall, 120.0))) {
-      val exp = expectedVec(f, w)
-      val got = Array.tabulate(w)(i => rows(ts).getAs[Float](s"byte($i)"))
-      val firstDiff = got.zip(exp).indexWhere(p => p._1 != p._2)
-      assert(got.sameElements(exp), s"ts=$ts widened vector diverges at byte($firstDiff)")
+      // every one of the 1525 floats, exactly — truncated and padded shapes
+      for ((f, ts) <- Seq((fBig, 110.0), (fSmall, 120.0))) {
+        val exp = expectedVec(f, w)
+        val got = Array.tabulate(w)(i => rows(ts).getAs[Float](s"byte($i)"))
+        val firstDiff = got.zip(exp).indexWhere(p => p._1 != p._2)
+        assert(got.sameElements(exp), s"ts=$ts widened vector diverges at byte($firstDiff)")
+      }
+
+      // the load-bearing boundary indices, called out explicitly (TCP, ihl=20):
+      val big = rows(110.0)
+      assert(big.getAs[Float]("byte(0)") == 0x45 / 255f)    // version+ihl survives
+      (12 to 19).foreach(i => assert(big.getAs[Float](s"byte($i)") == 0f)) // anonymized IPs
+      (20 to 23).foreach(i => assert(big.getAs[Float](s"byte($i)") == 0f)) // zeroed ports at ihl*4
+      assert(big.getAs[Float]("byte(10)") == 0xBE / 255f)   // IP checksum stays STALE
+      assert(big.getAs[Float]("byte(11)") == 0xEF / 255f)
+      assert(big.getAs[Float]("byte(36)") == 0xCA / 255f)   // TCP checksum (20+16) stale too
+      assert(big.getAs[Float]("byte(1524)") == (bigApp(1484) & 0xff) / 255f) // last col = app byte
+      val small = rows(120.0)
+      assert(small.getAs[Float]("byte(26)") == 0xCA / 255f) // UDP checksum (20+6) stale
+      assert(small.getAs[Float]("byte(127)") == (smallApp(99) & 0xff) / 255f) // last real byte
+      assert(small.getAs[Float]("byte(128)") == 0f && small.getAs[Float]("byte(1524)") == 0f) // pad
     }
-
-    // the load-bearing boundary indices, called out explicitly (TCP, ihl=20):
-    val big = rows(110.0)
-    assert(big.getAs[Float]("byte(0)") == 0x45 / 255f)    // version+ihl survives
-    (12 to 19).foreach(i => assert(big.getAs[Float](s"byte($i)") == 0f)) // anonymized IPs
-    (20 to 23).foreach(i => assert(big.getAs[Float](s"byte($i)") == 0f)) // zeroed ports at ihl*4
-    assert(big.getAs[Float]("byte(10)") == 0xBE / 255f)   // IP checksum stays STALE
-    assert(big.getAs[Float]("byte(11)") == 0xEF / 255f)
-    assert(big.getAs[Float]("byte(36)") == 0xCA / 255f)   // TCP checksum (20+16) stale too
-    assert(big.getAs[Float]("byte(1524)") == (bigApp(1484) & 0xff) / 255f) // last col = app byte
-    val small = rows(120.0)
-    assert(small.getAs[Float]("byte(26)") == 0xCA / 255f) // UDP checksum (20+6) stale
-    assert(small.getAs[Float]("byte(127)") == (smallApp(99) & 0xff) / 255f) // last real byte
-    assert(small.getAs[Float]("byte(128)") == 0f && small.getAs[Float]("byte(1524)") == 0f) // pad
   }
 
   test("no adversarial sink when no rule fires") {
-    val dir = Files.createTempDirectory("graft-pipe2").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "cap.pcap")
-    Files.write(pcap.toPath, pcapOf((120.0, frame("10.0.0.1", "10.0.0.2", 1, 2, 6))))
-    val quiet = cfg.copy(rules = Seq(LabelRule(100.0, 200.0, Seq("99.9.9.9"), Nil, "x")))
-    val (_, advPath) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", quiet)
-    assert(advPath.isEmpty)
+    withTempDir("graft-pipe2") { dir =>
+      val pcap = new java.io.File(dir, "cap.pcap")
+      Files.write(pcap.toPath, pcapOf((120.0, frame("10.0.0.1", "10.0.0.2", 1, 2, 6))))
+      val quiet = cfg.copy(rules = Seq(LabelRule(100.0, 200.0, Seq("99.9.9.9"), Nil, "x")))
+      val (_, advPath) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out", quiet)
+      assert(advPath.isEmpty)
+    }
   }
 
   test("splittable source matches whole-file read on a multi-record capture") {
@@ -188,37 +217,37 @@ class BytesPipelineSpec extends SparkSpec {
       val app = new Array[Byte](rnd.nextInt(300)); rnd.nextBytes(app)
       (1000.0 + i, frame(s"10.0.${i % 5}.1", "10.0.9.9", 1000 + i, 80, if (i % 3 == 0) 17 else 6, app))
     }
-    val dir = Files.createTempDirectory("graft-split").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "big.pcap")
-    Files.write(pcap.toPath, pcapOf(many: _*))
+    withTempDir("graft-split") { dir =>
+      val pcap = new java.io.File(dir, "big.pcap")
+      Files.write(pcap.toPath, pcapOf(many: _*))
 
-    val whole = PcapSource.packets(spark, Seq(pcap.getAbsolutePath))
-      .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
-    val splitDs = PcapSource.packetsSplittable(spark, Seq(pcap.getAbsolutePath), targetSplitBytes = 4096)
-    val split = splitDs.collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
-    assert(split.length == whole.length)
-    assert(split.sameElements(whole))
-    // one scan partition per planned split, and no shuffle to place them
-    val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 4096).size
-    assert(nSplits > 1 && splitDs.rdd.getNumPartitions == nSplits)
-    val plan = splitDs.queryExecution.executedPlan
-    assert(SinkPlans.find(plan)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty, plan.toString)
+      val whole = PcapSource.packets(spark, Seq(pcap.getAbsolutePath))
+        .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
+      val splitDs = PcapSource.packetsSplittable(spark, Seq(pcap.getAbsolutePath), targetSplitBytes = 4096)
+      val split = splitDs.collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
+      assert(split.length == whole.length)
+      assert(split.sameElements(whole))
+      // one scan partition per planned split, and no shuffle to place them
+      val nSplits = PcapSource.planSplits(spark, Seq(pcap.getAbsolutePath), 4096).size
+      assert(nSplits > 1 && splitDs.rdd.getNumPartitions == nSplits)
+      val plan = splitDs.queryExecution.executedPlan
+      assert(SinkPlans.shuffles(plan).isEmpty, plan.toString)
+    }
   }
 
   test("flagship pipeline ingests pcapng captures unchanged (format dispatch)") {
-    val dir = Files.createTempDirectory("graft-ng").toFile
-    dir.deleteOnExit()
-    val ng = new java.io.File(dir, "cap.pcapng")
-    Files.write(ng.toPath, graft.pcap.PcapngFormat.write(
-      frames.map { case (ts, f) => graft.pcap.PcapRecord(ts, f) }))
-    val (dataPath, advPath) =
-      BytesPipeline.run(spark, Seq(ng.getAbsolutePath), s"$dir/out", cfg)
-    val data = spark.read.parquet(dataPath).collect()
-    assert(data.length == 4) // same 4 survivors as the classic-pcap test
-    assert(data.map(r => r.getDouble(0) -> r.getAs[String]("label")).toMap ==
-      Map(120.0 -> "benign", 130.0 -> "dos", 140.0 -> "dos", 260.0 -> "benign"))
-    assert(spark.read.parquet(advPath.get).collect().map(_.getDouble(0)).toSeq == Seq(130.0))
+    withTempDir("graft-ng") { dir =>
+      val ng = new java.io.File(dir, "cap.pcapng")
+      Files.write(ng.toPath, graft.pcap.PcapngFormat.write(
+        frames.map { case (ts, f) => graft.pcap.PcapRecord(ts, f) }))
+      val (dataPath, advPath) =
+        BytesPipeline.run(spark, Seq(ng.getAbsolutePath), s"$dir/out", cfg)
+      val data = spark.read.parquet(dataPath).collect()
+      assert(data.length == 4) // same 4 survivors as the classic-pcap test
+      assert(data.map(r => r.getDouble(0) -> r.getAs[String]("label")).toMap ==
+        Map(120.0 -> "benign", 130.0 -> "dos", 140.0 -> "dos", 260.0 -> "benign"))
+      assert(spark.read.parquet(advPath.get).collect().map(_.getDouble(0)).toSeq == Seq(130.0))
+    }
   }
 
   test("splittable pcapng matches whole-file read (block resync)") {
@@ -228,23 +257,23 @@ class BytesPipelineSpec extends SparkSpec {
       graft.pcap.PcapRecord(2000.0 + i + 0.000000001 * i,
         frame(s"10.0.${i % 5}.1", "10.0.9.9", 1000 + i, 80, if (i % 3 == 0) 17 else 6, app))
     }
-    val dir = Files.createTempDirectory("graft-ngsplit").toFile
-    dir.deleteOnExit()
-    val ng = new java.io.File(dir, "big.pcapng")
-    // nano resolution so split/whole equality also pins the divisor path
-    Files.write(ng.toPath, graft.pcap.PcapngFormat.write(many, divisors = Seq(1e9)))
+    withTempDir("graft-ngsplit") { dir =>
+      val ng = new java.io.File(dir, "big.pcapng")
+      // nano resolution so split/whole equality also pins the divisor path
+      Files.write(ng.toPath, graft.pcap.PcapngFormat.write(many, divisors = Seq(1e9)))
 
-    val whole = PcapSource.packets(spark, Seq(ng.getAbsolutePath))
-      .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
-    val split = PcapSource.packetsSplittable(spark, Seq(ng.getAbsolutePath), targetSplitBytes = 4096)
-      .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
-    assert(split.length == whole.length)
-    assert(split.sameElements(whole))
-    // and the SQL connector plans the same multi-split read
-    val viaSql = spark.read.format("pcap").option("splitBytes", "4096")
-      .load(ng.getAbsolutePath)
-    assert(viaSql.rdd.getNumPartitions > 1, "pcapng file did not split")
-    assert(viaSql.count() == whole.length)
+      val whole = PcapSource.packets(spark, Seq(ng.getAbsolutePath))
+        .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
+      val split = PcapSource.packetsSplittable(spark, Seq(ng.getAbsolutePath), targetSplitBytes = 4096)
+        .collect().map(p => (p.timestamp, p.src_port, p.payload.toSeq)).sortBy(_._1)
+      assert(split.length == whole.length)
+      assert(split.sameElements(whole))
+      // and the SQL connector plans the same multi-split read
+      val viaSql = spark.read.format("pcap").option("splitBytes", "4096")
+        .load(ng.getAbsolutePath)
+      assert(viaSql.rdd.getNumPartitions > 1, "pcapng file did not split")
+      assert(viaSql.count() == whole.length)
+    }
   }
 
   test("splittable pcapng honors if_tsoffset: split == whole, absolute timestamps") {
@@ -255,19 +284,19 @@ class BytesPipelineSpec extends SparkSpec {
       graft.pcap.PcapRecord(offset + 10.0 + i * 0.5,
         frame(s"10.0.${i % 5}.1", "10.0.9.9", 1000 + i, 80, if (i % 3 == 0) 17 else 6, app))
     }
-    val dir = Files.createTempDirectory("graft-ngoff").toFile
-    dir.deleteOnExit()
-    val ng = new java.io.File(dir, "off.pcapng")
-    Files.write(ng.toPath, graft.pcap.PcapngFormat.write(many, tsOffsets = Seq(offset)))
+    withTempDir("graft-ngoff") { dir =>
+      val ng = new java.io.File(dir, "off.pcapng")
+      Files.write(ng.toPath, graft.pcap.PcapngFormat.write(many, tsOffsets = Seq(offset)))
 
-    val whole = PcapSource.packets(spark, Seq(ng.getAbsolutePath))
-      .collect().map(p => (p.timestamp, p.src_port)).sortBy(_._1)
-    // absolute time recovered, not the relative raw values
-    assert(whole.head._1 == offset + 10.0 && whole.last._1 == offset + 10.0 + 299 * 0.5)
-    val split = PcapSource.packetsSplittable(spark, Seq(ng.getAbsolutePath), targetSplitBytes = 4096)
-      .collect().map(p => (p.timestamp, p.src_port)).sortBy(_._1)
-    assert(split.sameElements(whole),
-      "split planning must carry if_tsoffset through PcapSplit")
+      val whole = PcapSource.packets(spark, Seq(ng.getAbsolutePath))
+        .collect().map(p => (p.timestamp, p.src_port)).sortBy(_._1)
+      // absolute time recovered, not the relative raw values
+      assert(whole.head._1 == offset + 10.0 && whole.last._1 == offset + 10.0 + 299 * 0.5)
+      val split = PcapSource.packetsSplittable(spark, Seq(ng.getAbsolutePath), targetSplitBytes = 4096)
+        .collect().map(p => (p.timestamp, p.src_port)).sortBy(_._1)
+      assert(split.sameElements(whole),
+        "split planning must carry if_tsoffset through PcapSplit")
+    }
   }
 
   test("runAccounted counts SPB (no-timestamp) records loudly instead of silent drops") {
@@ -285,80 +314,80 @@ class BytesPipelineSpec extends SparkSpec {
         .putInt(f.length).put(f).put(new Array[Byte](pad)).putInt(total).array()
     }
     val spbs = (0 until 3).flatMap(i => spb(frame("10.0.0.5", "10.0.0.6", 5000 + i, 80, 6)))
-    val dir = Files.createTempDirectory("graft-spb").toFile
-    dir.deleteOnExit()
-    val ng = new java.io.File(dir, "spb.pcapng")
-    Files.write(ng.toPath, img ++ spbs)
+    withTempDir("graft-spb") { dir =>
+      val ng = new java.io.File(dir, "spb.pcapng")
+      Files.write(ng.toPath, img ++ spbs)
 
-    val r = BytesPipeline.runAccounted(spark, Seq(ng.getAbsolutePath), s"$dir/out", cfg)
-    assert(r.ingestedPackets == 8, "5 EPBs (ts 50 excluded later by range, still ingested) + 3 SPBs")
-    assert(r.noTimestampPackets == 3)
-    // the SPBs were range-filtered out of the published snapshot...
-    assert(spark.read.parquet(r.dataPath).count() == 4)
-    // ...and latest() resolves the same committed snapshot
-    assert(BytesPipeline.latest(spark, s"$dir/out").map(_._1).contains(r.dataPath))
+      val r = BytesPipeline.runAccounted(spark, Seq(ng.getAbsolutePath), s"$dir/out", cfg)
+      assert(r.ingestedPackets == 8, "5 EPBs (ts 50 excluded later by range, still ingested) + 3 SPBs")
+      assert(r.noTimestampPackets == 3)
+      // the SPBs were range-filtered out of the published snapshot...
+      assert(spark.read.parquet(r.dataPath).count() == 4)
+      // ...and latest() resolves the same committed snapshot
+      assert(BytesPipeline.latest(spark, s"$dir/out").map(_._1).contains(r.dataPath))
+    }
   }
 
   test("IPv6 is opt-in: default preset drops v6, ipv6=true decodes it alongside v4") {
-    val dir = Files.createTempDirectory("graft-v6").toFile
-    dir.deleteOnExit()
-    val mixed = frames :+ (135.0, frame6(7, 9, 443, 55000)) // v6 inside the range
-    val pcap = new java.io.File(dir, "mix.pcap")
-    Files.write(pcap.toPath, pcapOf(mixed: _*))
+    withTempDir("graft-v6") { dir =>
+      val mixed = frames :+ (135.0, frame6(7, 9, 443, 55000)) // v6 inside the range
+      val pcap = new java.io.File(dir, "mix.pcap")
+      Files.write(pcap.toPath, pcapOf(mixed: _*))
 
-    // reference-parity preset: flagship output identical to a v4-only capture
-    val (d1, _) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/o1", cfg)
-    assert(spark.read.parquet(d1).count() == 4)
+      // reference-parity preset: flagship output identical to a v4-only capture
+      val (d1, _) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/o1", cfg)
+      assert(spark.read.parquet(d1).count() == 4)
 
-    val (d2, _) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/o2",
-      cfg.copy(ipv6 = true))
-    val rows = spark.read.parquet(d2).collect()
-    assert(rows.length == 5)
-    val v6row = rows.find(_.getDouble(0) == 135.0).get
-    assert(v6row.getAs[String]("src_ip") == "2001:db8:0:0:0:0:0:7")
-    assert(v6row.getAs[String]("label") == "benign") // v4 rules don't match v6 addrs
-    // widened floats show the anonymized v6 address bytes (offsets 8-39) zeroed
-    (8 to 39).foreach(i => assert(v6row.getAs[Float](s"byte($i)") == 0.0f))
+      val (d2, _) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/o2",
+        cfg.copy(ipv6 = true))
+      val rows = spark.read.parquet(d2).collect()
+      assert(rows.length == 5)
+      val v6row = rows.find(_.getDouble(0) == 135.0).get
+      assert(v6row.getAs[String]("src_ip") == "2001:db8:0:0:0:0:0:7")
+      assert(v6row.getAs[String]("label") == "benign") // v4 rules don't match v6 addrs
+      // widened floats show the anonymized v6 address bytes (offsets 8-39) zeroed
+      (8 to 39).foreach(i => assert(v6row.getAs[Float](s"byte($i)") == 0.0f))
+    }
   }
 
   test("dual sink is crash-consistent: a reader never sees a torn pair") {
-    val dir = Files.createTempDirectory("graft-atomic").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "cap.pcap")
-    Files.write(pcap.toPath, pcapOf(frames: _*))
-    val out = s"$dir/out"
+    withTempDir("graft-atomic") { dir =>
+      val pcap = new java.io.File(dir, "cap.pcap")
+      Files.write(pcap.toPath, pcapOf(frames: _*))
+      val out = s"$dir/out"
 
-    // v=1: a committed snapshot WITH an adversarial table
-    val (data1, adv1) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, cfg)
-    assert(data1 == s"$out/v=1/data" && adv1.contains(s"$out/v=1/adversarial"))
-    assert(BytesPipeline.latest(spark, out).contains((data1, adv1)))
+      // v=1: a committed snapshot WITH an adversarial table
+      val (data1, adv1) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, cfg)
+      assert(data1 == s"$out/v=1/data" && adv1.contains(s"$out/v=1/adversarial"))
+      assert(BytesPipeline.latest(spark, out).contains((data1, adv1)))
 
-    // Simulate a run KILLED between the two writes: v=2/data staged, no
-    // adversarial, no marker. This is exactly the on-disk state of the
-    // old overwrite scheme's torn window.
-    spark.read.parquet(data1).limit(1).write.parquet(s"$out/v=2/data")
-    val seen = BytesPipeline.latest(spark, out).get
-    assert(seen == (data1, adv1),
-      s"reader surfaced the uncommitted half-snapshot: $seen")
-    // both halves of the visible pair are intact and from ONE version
-    assert(spark.read.parquet(seen._1).count() == 4)
-    assert(spark.read.parquet(seen._2.get).count() == 1)
+      // Simulate a run KILLED between the two writes: v=2/data staged, no
+      // adversarial, no marker. This is exactly the on-disk state of the
+      // old overwrite scheme's torn window.
+      spark.read.parquet(data1).limit(1).write.parquet(s"$out/v=2/data")
+      val seen = BytesPipeline.latest(spark, out).get
+      assert(seen == (data1, adv1),
+        s"reader surfaced the uncommitted half-snapshot: $seen")
+      // both halves of the visible pair are intact and from ONE version
+      assert(spark.read.parquet(seen._1).count() == 4)
+      assert(spark.read.parquet(seen._2.get).count() == 1)
 
-    // The retry publishes PAST the orphan (never reuses v=2), prunes both
-    // the superseded v=1 and the orphan staging dir.
-    val (data3, adv3) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, cfg)
-    assert(data3 == s"$out/v=3/data" && adv3.contains(s"$out/v=3/adversarial"))
-    assert(BytesPipeline.latest(spark, out).contains((data3, adv3)))
-    assert(!new java.io.File(s"$out/v=1").exists(), "superseded snapshot not pruned")
-    assert(!new java.io.File(s"$out/v=2").exists(), "orphan staging dir not pruned")
+      // The retry publishes PAST the orphan (never reuses v=2), prunes both
+      // the superseded v=1 and the orphan staging dir.
+      val (data3, adv3) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, cfg)
+      assert(data3 == s"$out/v=3/data" && adv3.contains(s"$out/v=3/adversarial"))
+      assert(BytesPipeline.latest(spark, out).contains((data3, adv3)))
+      assert(!new java.io.File(s"$out/v=1").exists(), "superseded snapshot not pruned")
+      assert(!new java.io.File(s"$out/v=2").exists(), "orphan staging dir not pruned")
 
-    // Adversarial ELISION is versioned too: publish with no rule firing
-    // and the old adversarial must stop being visible (the stale-pair bug
-    // of the overwrite scheme).
-    val quiet = cfg.copy(rules = Seq(LabelRule(100.0, 200.0, Seq("99.9.9.9"), Nil, "x")))
-    val (data4, adv4) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, quiet)
-    assert(adv4.isEmpty)
-    assert(BytesPipeline.latest(spark, out).contains((data4, None)))
+      // Adversarial ELISION is versioned too: publish with no rule firing
+      // and the old adversarial must stop being visible (the stale-pair bug
+      // of the overwrite scheme).
+      val quiet = cfg.copy(rules = Seq(LabelRule(100.0, 200.0, Seq("99.9.9.9"), Nil, "x")))
+      val (data4, adv4) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), out, quiet)
+      assert(adv4.isEmpty)
+      assert(BytesPipeline.latest(spark, out).contains((data4, None)))
+    }
   }
 
   private val metaCols = Seq("timestamp", "src_ip", "dst_ip", "src_port", "dst_port", "protocol", "label")
@@ -415,17 +444,20 @@ class BytesPipelineSpec extends SparkSpec {
   }
 
   test("the 1525-wide sinks plan WidenExec and no projection over 100 expressions") {
-    val dir = Files.createTempDirectory("graft-widenplan").toFile
-    dir.deleteOnExit()
-    val pcap = new java.io.File(dir, "cap.pcap")
-    Files.write(pcap.toPath, pcapOf(frames: _*))
-    val plans = SinkPlans.capture(spark) {
-      val (_, adv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out",
-        cfg.copy(width = 1525))
-      assert(adv.isDefined)
+    withTempDir("graft-widenplan") { dir =>
+      val pcap = new java.io.File(dir, "cap.pcap")
+      Files.write(pcap.toPath, pcapOf(frames: _*))
+      val plans = SinkPlans.capture(spark) {
+        val (_, adv) = BytesPipeline.run(spark, Seq(pcap.getAbsolutePath), s"$dir/out",
+          cfg.copy(width = 1525))
+        assert(adv.isDefined)
+      }
+      assert(plans.count(SinkPlans.hasWiden) == 2, "data and adversarial writes both widen natively")
+    // each sink write holds WidenExec under a CoalesceExec, with no shuffle
+    assert(plans.filter(SinkPlans.hasWiden).forall(p =>
+      SinkPlans.coalescesOverWiden(p).size == 1 && SinkPlans.shuffles(p).isEmpty))
+      val wide = plans.flatMap(SinkPlans.wideProjects)
+      assert(wide.isEmpty, s"wide projections left in the sink: ${wide.map(_.projectList.size)}")
     }
-    assert(plans.count(SinkPlans.hasWiden) == 2, "data and adversarial writes both widen natively")
-    val wide = plans.flatMap(SinkPlans.wideProjects)
-    assert(wide.isEmpty, s"wide projections left in the sink: ${wide.map(_.projectList.size)}")
   }
 }

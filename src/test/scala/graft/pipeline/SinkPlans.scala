@@ -2,8 +2,10 @@ package graft.pipeline
 
 import graft.plans.WidenExec
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
@@ -35,6 +37,17 @@ object SinkPlans extends AdaptiveSparkPlanHelper {
     * expressions: these run outside whole-stage codegen. */
   def wideProjects(p: SparkPlan): Seq[ProjectExec] =
     collect(p) { case pr: ProjectExec if pr.projectList.size > 100 => pr }
+
+  /** Coalesces that consume the widened rows. */
+  def coalescesOverWiden(p: SparkPlan): Seq[CoalesceExec] =
+    collect(p) { case c: CoalesceExec if hasWiden(c) => c }
+
+  def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    collect(p) { case s: ShuffleExchangeExec => s }
+
+  /** Column names of the cached relations a plan reads. */
+  def cachedColumns(p: SparkPlan): Seq[String] =
+    collect(p) { case s: InMemoryTableScanExec => s.relation.output.map(_.name) }.flatten
 
   /** Projections that consume the widened rows. */
   def projectsOverWiden(p: SparkPlan): Seq[ProjectExec] =

@@ -32,34 +32,35 @@ class StreamingUpsertSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString
-    val in = MemoryStream[Event]
-    val q: StreamingQuery = StreamingOps.upsertLatestSink(in.toDF(), dir, ckpt)
-    try {
-      in.addData(Seq(ev(1, 1, user = 7, v = 1.0), ev(2, 2, user = 7, v = 2.0),
-        ev(3, 1, user = 8, v = 8.0)))
-      q.processAllAvailable()
-      in.addData(Seq(ev(4, 5, user = 7, v = 7.5), ev(5, 3, user = 9, v = 9.0)))
-      q.processAllAvailable()
-      // out-of-order update: user 8's event 6 is EARLIER than event 3 —
-      // latest-wins must keep event 3
-      in.addData(Seq(ev(6, 0, user = 8, v = -1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
+    withTempDir("graft_upsert") { d => withTempDir("graft_upsert_ckpt") { c =>
+      val (dir, ckpt) = (d.toString, c.toString)
+      val in = MemoryStream[Event]
+      val q: StreamingQuery = StreamingOps.upsertLatestSink(in.toDF(), dir, ckpt)
+      try {
+        in.addData(Seq(ev(1, 1, user = 7, v = 1.0), ev(2, 2, user = 7, v = 2.0),
+          ev(3, 1, user = 8, v = 8.0)))
+        q.processAllAvailable()
+        in.addData(Seq(ev(4, 5, user = 7, v = 7.5), ev(5, 3, user = 9, v = 9.0)))
+        q.processAllAvailable()
+        // out-of-order update: user 8's event 6 is EARLIER than event 3 —
+        // latest-wins must keep event 3
+        in.addData(Seq(ev(6, 0, user = 8, v = -1.0)))
+        q.processAllAvailable()
+      } finally q.stop()
 
-    val expected = Map(7L -> (4L, 7.5), 8L -> (3L, 8.0), 9L -> (5L, 9.0))
-    assert(snapshot(dir) == expected, s"snapshot diverged: ${snapshot(dir)}")
+      val expected = Map(7L -> (4L, 7.5), 8L -> (3L, 8.0), 9L -> (5L, 9.0))
+      assert(snapshot(dir) == expected, s"snapshot diverged: ${snapshot(dir)}")
 
-    // Crash-replay: re-apply the LAST micro-batch against the surviving
-    // prior version. The rewrite must land the same version id with the
-    // same contents.
-    val lastBatch = Seq(ev(6, 0, user = 8, v = -1.0)).toDF()
-    val vs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toLong).sorted
-    assert(vs.length == 2, s"expected exactly one prior version retained: ${vs.toSeq}")
-    StreamingOps.applyUpsert(lastBatch, dir, vs.max)
-    assert(snapshot(dir) == expected, s"replay double-applied: ${snapshot(dir)}")
+      // Crash-replay: re-apply the LAST micro-batch against the surviving
+      // prior version. The rewrite must land the same version id with the
+      // same contents.
+      val lastBatch = Seq(ev(6, 0, user = 8, v = -1.0)).toDF()
+      val vs = new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("v="))
+        .map(_.getName.stripPrefix("v=").toLong).sorted
+      assert(vs.length == 2, s"expected exactly one prior version retained: ${vs.toSeq}")
+      StreamingOps.applyUpsert(lastBatch, dir, vs.max)
+      assert(snapshot(dir) == expected, s"replay double-applied: ${snapshot(dir)}")
+    }}
   }
 }
