@@ -11,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
 /** The flagship workload: the reference's whole program
   * (/root/reference/BytesProcessor.py:48-194) as ONE declarative Spark
   * pipeline — pcap scan -> decode/anonymize -> multi-range time filter ->
-  * rule labeling -> vectorize -> dual parquet sink.
+  * rule labeling -> dual parquet sink, which vectorizes and widens the
+  * payloads as it encodes them ([[WideParquet]]).
   *
   * Execution shape (SURVEY.md §3.4): a single narrow stage per sink, zero
   * shuffles — the pipeline is embarrassingly parallel, so at 100 TB it
@@ -74,27 +75,22 @@ object BytesPipeline {
 
   /** Widen features to the reference's `byte(0)..byte(width-1)` columns
     * (:183-184): the 7 metadata columns, then one nullable FloatType column
-    * per element. Internal stages stay ArrayType and only the sink widens.
+    * per element, as a frame. The sinks do not call it: they hand the
+    * cached payloads to [[WideParquet]], which computes the same columns in
+    * the file writer (see [[writeDual]]). It stays for callers that want
+    * the wide rows themselves.
     *
     * Built by the native [[graft.plans.Widen]] operator, not a `select` of
     * 1525 `getItem(i)`s. Such a projection is over
     * `spark.sql.codegen.maxFields` (100), so it runs outside whole-stage
     * codegen, and then every task generates, formats and compiles its own
-    * `UnsafeProjection` source for all 1525 expressions (16 tasks per
-    * `runAccounted` at 8 splits: data and adversarial writes). `WidenExec`
+    * `UnsafeProjection` source for all 1525 expressions. `WidenExec`
     * generates no code; it fills one reused row writer per partition in
-    * one loop. On flagbench `flagship_wide` (3000 packets, `local[4]`,
-    * 4-core host) the median pass went from 5.36 s to 2.69 s over ten
-    * paired runs, and traced executor CPU fell about fourfold. An array
-    * whose length is not `width` fails the task.
+    * one loop. An array whose length is not `width` fails the task.
     */
   def widen(df: DataFrame, width: Int): DataFrame =
     Widen.of(df.select((MetaCols :+ "features").map(col): _*), "features",
       (0 until width).map(i => s"byte($i)"))
-
-  /** The frame a sink writes: widened when `cfg.widen`. */
-  private def sinkFrame(df: DataFrame, cfg: Config): DataFrame =
-    if (cfg.widen) widen(df, cfg.width) else df
 
   /** Rows per sink file: ~128 MiB of floats (the default split size), so
     * 22,002 rows at width 1525. */
@@ -124,20 +120,29 @@ object BytesPipeline {
     }.sum
   }
 
-  /** One sink table: `df` widened when `cfg.widen`, written by `tasks`
-    * tasks (coalesced above the widen, so no shuffle), and no file over
-    * [[rowsPerFile]] rows. */
+  /** One sink table from the labeled payload rows `df`: written by `tasks`
+    * tasks when given (a coalesce, so no shuffle), else one per partition,
+    * and no file over [[rowsPerFile]] rows. When `cfg.widen` the metadata
+    * columns and `payload` go to [[WideParquet]], which writes the
+    * `byte(i)` columns itself; otherwise `payload` is vectorized into the
+    * `features` array column and written with `.parquet`. */
   private def writeTable(df: DataFrame, path: String, tasks: Option[Int], cfg: Config): Unit = {
-    val frame = sinkFrame(df, cfg)
-    tasks.fold(frame)(frame.coalesce)
-      .write.option("maxRecordsPerFile", rowsPerFile(cfg.width))
-      .mode("overwrite").parquet(path)
+    val frame = if (cfg.widen) df.select((MetaCols :+ "payload").map(col): _*) else vectorize(df, cfg)
+    val sized = tasks.fold(frame)(frame.coalesce)
+    (if (cfg.widen) WideParquet.writer(sized, cfg.width)
+     else sized.write.format("parquet").option("maxRecordsPerFile", rowsPerFile(cfg.width)))
+      .mode("overwrite").save(path)
   }
 
   /** The dual sink (:110-119): all of `labeled` to `dataPath`, its forward
-    * rows to `advPath` only when there are any (:115-117). An `observe`
-    * node on the data write, which holds every forward row, counts them:
-    * no extra job, and no empty table written and then deleted.
+    * rows to `advPath` only when there are any (:115-117). `labeled` is the
+    * persisted output of [[inRangeLabeled]]: payloads, not floats. With
+    * `cfg.widen` both tables are written by [[WideParquet]] straight from
+    * those payloads, so no sink plan holds a float array or a widened row;
+    * each open file buffers at most [[rowsPerFile]] rows of `width` payload
+    * bytes in its task, 32 MiB at any width. An `observe` node on the data
+    * write, which holds every forward row, counts them: no extra job, and
+    * no empty table written and then deleted.
     *
     * A 1532-column Parquet file costs ~0.4 MB of footer, column-chunk
     * metadata and dictionaries however few rows it holds, so both tables
@@ -183,7 +188,7 @@ object BytesPipeline {
                    checkpoint: Option[String] = None, availableNow: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val packets = PcapSource.packetsStream(spark, watchDir, ipv6 = cfg.ipv6)
-    val writer = features(packets, cfg)
+    val writer = inRangeLabeled(packets.toDF(), cfg)
       .writeStream
       .option("checkpointLocation", checkpoint.getOrElse(s"$outDir/_checkpoint"))
     (if (availableNow)
@@ -195,7 +200,9 @@ object BytesPipeline {
         // see as a partition column, so a replayed batch replaces its own
         // output instead of appending duplicates. A batch with no rows left
         // leaves a data/batch_id=N holding one zero-row file; a batch with
-        // no forward rows touches no adversarial path.
+        // no forward rows touches no adversarial path. The batch persists
+        // its payloads, as a snapshot run does: a float cache of the same
+        // trigger is 1525 x 4 bytes a row (~37 GB at 128 MB capture files).
         val labeled = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try writeDual(labeled, s"$outDir/data/batch_id=$batchId",
           s"$outDir/adversarial/batch_id=$batchId", cfg, tasks = None)
@@ -309,21 +316,20 @@ object BytesPipeline {
     // Sized from the unobserved `packets`, never from `labeled` (see above).
     val tasks = dataTasks(packets.queryExecution.toRdd.getNumPartitions,
       captureBytes(spark, pcapPaths), spark.sparkContext.defaultParallelism)
-    // Persisted before vectorizing: a payload (at most one frame) caches in
-    // a quarter or less of the space of its `width` floats. Cached as
-    // floats, each split's column buffer passed 1 MiB, so G1 allocated it
-    // straight into the old generation, where it stayed until unpersist;
-    // on flagbench `flagship_wide` that set off extra concurrent cycles and
-    // mixed collections in some runs and not others. Each sink vectorizes
-    // the cached payloads itself; the adversarial one only its forward rows.
+    // Persisted as payloads: a payload (at most one frame) caches in a
+    // quarter or less of the space of its `width` floats. Cached as floats,
+    // each split's column buffer passed 1 MiB, so G1 allocated it straight
+    // into the old generation, where it stayed until unpersist; on
+    // flagbench `flagship_wide` that set off extra concurrent cycles and
+    // mixed collections in some runs and not others. Each sink reads the
+    // cached payloads itself; the adversarial one only its forward rows.
     val cached = inRangeLabeled(observed, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    val labeled = vectorize(cached, cfg)
     try {
       val prev = publishedVersions(spark, outDir)
       val v = (prev ++ stagedVersions(spark, outDir)).foldLeft(0L)(math.max) + 1
       val stage = s"$outDir/v=$v"
       val dataPath = s"$stage/data"
-      val advPath = writeDual(labeled, dataPath, s"$stage/adversarial", cfg, Some(tasks))
+      val advPath = writeDual(cached, dataPath, s"$stage/adversarial", cfg, Some(tasks))
       // COMMIT: the snapshot becomes visible in one atomic file create.
       val (fs, _) = fsOf(spark, outDir)
       fs.create(new org.apache.hadoop.fs.Path(outDir, s"$MarkerPrefix$v"), false).close()

@@ -73,6 +73,7 @@ final case class WidenExec(
     val nullElems = features.dataType.asInstanceOf[ArrayType].containsNull
     val nMeta = meta.size
     val width = bytes.size
+    val featName = features.name // read in the closure below, which must not capture the operator
     child.execute().mapPartitions { rows =>
       val w = new UnsafeRowWriter(nMeta + width)
       rows.map { row =>
@@ -90,7 +91,7 @@ final case class WidenExec(
           val arr = row.getArray(featOrd)
           if (arr.numElements != width)
             throw new SparkException(
-              s"Widen: ${features.name} holds ${arr.numElements} elements, expected $width")
+              s"Widen: $featName holds ${arr.numElements} elements, expected $width")
           var i = 0
           while (i < width) {
             if (nullElems && arr.isNullAt(i)) w.setNullAt(nMeta + i)

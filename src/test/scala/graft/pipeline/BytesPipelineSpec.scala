@@ -119,12 +119,13 @@ class BytesPipelineSpec extends SparkSpec {
       // the over-split data write is packed to one task, so one file, per core ...
       val cores = spark.sparkContext.defaultParallelism
       assert(partFiles(r.dataPath).size == math.min(nSplits, cores))
-      // ... by a coalesce above the widen: no shuffle, no wide projection
-      val sinks = plans.filter(SinkPlans.hasWiden)
+      // ... by a coalesce under the WideParquet write: no shuffle, no widen
+      val sinks = plans.filter(SinkPlans.isWideWrite)
       assert(sinks.size == 2, "data and adversarial writes")
-      assert(sinks.exists(p => SinkPlans.coalescesOverWiden(p).map(_.numPartitions) == Seq(cores)),
+      assert(sinks.exists(p => SinkPlans.coalesces(p).map(_.numPartitions) == Seq(cores)),
         sinks.mkString("\n"))
-      assert(sinks.forall(p => SinkPlans.shuffles(p).isEmpty && SinkPlans.wideProjects(p).isEmpty))
+      assert(sinks.forall(p => SinkPlans.shuffles(p).isEmpty && !SinkPlans.hasWiden(p) &&
+        SinkPlans.wideProjects(p).isEmpty && SinkPlans.floatArrays(p).isEmpty), sinks.mkString("\n"))
       // ... and both read one cache of payloads, not of 1525-float vectors
       assert(sinks.forall { p =>
         val cols = SinkPlans.cachedColumns(p)
@@ -443,7 +444,7 @@ class BytesPipelineSpec extends SparkSpec {
     }
   }
 
-  test("the 1525-wide sinks plan WidenExec and no projection over 100 expressions") {
+  test("the 1525-wide sinks write payloads through WideParquet") {
     withTempDir("graft-widenplan") { dir =>
       val pcap = new java.io.File(dir, "cap.pcap")
       Files.write(pcap.toPath, pcapOf(frames: _*))
@@ -452,10 +453,17 @@ class BytesPipelineSpec extends SparkSpec {
           cfg.copy(width = 1525))
         assert(adv.isDefined)
       }
-      assert(plans.count(SinkPlans.hasWiden) == 2, "data and adversarial writes both widen natively")
-    // each sink write holds WidenExec under a CoalesceExec, with no shuffle
-    assert(plans.filter(SinkPlans.hasWiden).forall(p =>
-      SinkPlans.coalescesOverWiden(p).size == 1 && SinkPlans.shuffles(p).isEmpty))
+      val sinks = plans.filter(SinkPlans.isWideWrite)
+      assert(sinks.size == 2, "data and adversarial writes both go to WideParquet")
+      assert(sinks.forall(p => SinkPlans.wideWrites(p).size == 1), sinks.mkString("\n"))
+      // each write reads the payload cache under one coalesce, with no shuffle,
+      // no WidenExec and no float array anywhere in its plan
+      for (p <- sinks) {
+        assert(SinkPlans.coalesces(p).size == 1 && SinkPlans.shuffles(p).isEmpty, p)
+        assert(!SinkPlans.hasWiden(p) && SinkPlans.floatArrays(p).isEmpty, p)
+        val cols = SinkPlans.cachedColumns(p)
+        assert(cols.contains("payload") && !cols.contains("features"), p)
+      }
       val wide = plans.flatMap(SinkPlans.wideProjects)
       assert(wide.isEmpty, s"wide projections left in the sink: ${wide.map(_.projectList.size)}")
     }

@@ -5,8 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CoalesceExec, ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -38,9 +41,21 @@ object SinkPlans extends AdaptiveSparkPlanHelper {
   def wideProjects(p: SparkPlan): Seq[ProjectExec] =
     collect(p) { case pr: ProjectExec if pr.projectList.size > 100 => pr }
 
-  /** Coalesces that consume the widened rows. */
-  def coalescesOverWiden(p: SparkPlan): Seq[CoalesceExec] =
-    collect(p) { case c: CoalesceExec if hasWiden(c) => c }
+  /** The [[WideParquet]] writes in a plan. */
+  def wideWrites(p: SparkPlan): Seq[InsertIntoHadoopFsRelationCommand] =
+    collect(p) { case w: DataWritingCommandExec => w.cmd }.collect {
+      case c: InsertIntoHadoopFsRelationCommand if c.fileFormat.isInstanceOf[WideParquet] => c
+    }
+
+  def isWideWrite(p: SparkPlan): Boolean = wideWrites(p).nonEmpty
+
+  def coalesces(p: SparkPlan): Seq[CoalesceExec] = collect(p) { case c: CoalesceExec => c }
+
+  /** Nodes with an `array<float>` column in their output. */
+  def floatArrays(p: SparkPlan): Seq[SparkPlan] =
+    collect(p) {
+      case n if n.output.exists(_.dataType match { case ArrayType(FloatType, _) => true; case _ => false }) => n
+    }
 
   def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
     collect(p) { case s: ShuffleExchangeExec => s }
@@ -48,8 +63,4 @@ object SinkPlans extends AdaptiveSparkPlanHelper {
   /** Column names of the cached relations a plan reads. */
   def cachedColumns(p: SparkPlan): Seq[String] =
     collect(p) { case s: InMemoryTableScanExec => s.relation.output.map(_.name) }.flatten
-
-  /** Projections that consume the widened rows. */
-  def projectsOverWiden(p: SparkPlan): Seq[ProjectExec] =
-    collect(p) { case pr: ProjectExec if hasWiden(pr) => pr }
 }

@@ -49,12 +49,17 @@ class StreamingPipelineSpec extends SparkSpec {
           assert(!new java.io.File(s"$out/adversarial/batch_id=1").exists())
         } finally q.stop()
       }
-      // each micro-batch writes both sinks straight from WidenExec: no
-      // projection re-copies the widened rows (e.g. to add batch_id)
-      val sinks = plans.filter(SinkPlans.hasWiden)
+      // each micro-batch writes both sinks through WideParquet, straight
+      // from its persisted payloads: no float array, no widened row
+      val sinks = plans.filter(SinkPlans.isWideWrite)
       // data x 2 batches, adversarial for the first batch only
-      assert(sinks.size == 3, s"expected 3 widened writes, got ${sinks.size}")
-      assert(sinks.forall(p => SinkPlans.projectsOverWiden(p).isEmpty))
+      assert(sinks.size == 3, s"expected 3 WideParquet writes, got ${sinks.size}")
+      for (p <- sinks) {
+        val cols = SinkPlans.cachedColumns(p)
+        assert(cols.contains("payload") && !cols.contains("features"), p)
+        assert(!SinkPlans.hasWiden(p) && SinkPlans.floatArrays(p).isEmpty, p)
+        assert(SinkPlans.shuffles(p).isEmpty && SinkPlans.wideProjects(p).isEmpty, p)
+      }
     }
   }
 
