@@ -1,49 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Session warmup (untimed): first job otherwise pays JVM/codegen/
-    // scheduler init, distorting whichever query happens to run first.
-    // Exercises the scan + shuffle + window machinery once on tiny data.
-    {
-      import spark.implicits._
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("v")
-      (1 to 1000).map(i => (i % 7, i)).toDF("k", "v")
-        .withColumn("rn", row_number().over(w))
-        .groupBy("k").agg(sum("rn")).count()
-      Tables(spark, sfDir, "lineitem").select(count(lit(1))).count()
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
 
     // Shuffle accounting per query ("measure, don't guess"): stage-level
-    // task metrics accumulated by a listener, snapshotted at query
-    // boundaries. Written to the metrics file only — the stdout contract
-    // line keeps its schema.
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    // task metrics, drained at query boundaries. Written to the metrics
+    // file only — the stdout contract line keeps its schema.
+    val metrics = new StageMetrics(spark)
     val shuffleByQuery = scala.collection.mutable.Map[String, (Long, Long, Long)]()
 
     // Three timed passes per query, report the min: this host shows ±40%
@@ -54,7 +20,6 @@ object Bench {
     // are reported alongside so a stormy run is visible in the artifact.
     def pass(record: Boolean): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val (r0, w0, s0) = (shufRead.get, shufWrite.get, spilled.get)
         val t0 = System.nanoTime()
         // A failed query must not abort the whole bench, but it must be
         // LOUD: a swallowed failure shows up as a suspiciously fast time
@@ -64,18 +29,11 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (record) {
-          // Listener events are async; drain before snapshotting.
-          org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark)
-          shuffleByQuery(name) =
-            (shufRead.get - r0, shufWrite.get - w0, spilled.get - s0)
-        }
-        // Drop this query's localCheckpoint blocks (untimed): each run()
-        // call re-checkpoints its own frames, so blocks left behind only
-        // accumulate storage-memory pressure across the 208-query × 3-pass
-        // JVM and shift eviction behavior for later queries.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        val stages = metrics.drain()
+        if (record) shuffleByQuery(name) =
+          (stages.map(_.shuffleRead).sum, stages.map(_.shuffleWrite).sum, stages.map(_.spill).sum)
+        // Drop this query's localCheckpoint blocks (untimed).
+        Harness.release(spark)
         name -> dt
       }
     val p1 = pass(record = false).toMap
@@ -100,8 +58,8 @@ object Bench {
           val t0 = System.nanoTime()
           try { qmap(name)(spark, sfDir).count() } catch { case _: Throwable => () }
           best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          metrics.drain()
+          Harness.release(spark)
           i += 1
         }
         name -> best

@@ -150,7 +150,7 @@ object BytesPipeline {
     * The data table is written by `tasks` tasks when given (else one
     * per partition of `labeled`); the adversarial table by
     * `ceil(nFwd / rowsPerFile)` tasks, from the observed count. On
-    * flagbench `flagship_wide` (3000 packets, 8 splits, `local[4]`, 4-core
+    * flagbench `flagship_wide` (3000 packets, 8 splits, 4 local cores, 4-core
     * host) the data table went from 8 files to 4, and the median written
     * size from 10.68 to 8.25 MB over ten paired runs.
     * Returns `Some(advPath)` iff written. */

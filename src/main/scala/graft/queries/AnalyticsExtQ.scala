@@ -244,18 +244,14 @@ object AnalyticsExtQ {
       // primitive, on the suite's largest shuffle (~900k near-unique
       // pairs). Sorted-set emission guarantees a < b, so packing is
       // bijective while part keys stay below 2^31 (sf0.1 max 20 000;
-      // MakeSf's stride remap keeps sf100 ≈ 2.0e6 — re-widen the key
-      // before any decade where partkey could cross 2^31). Numeric order
+      // MakeSf's stride remap keeps sf100 ≈ 2.0e6; `packedPairs` fails
+      // the query if a partkey reaches 2^31). Numeric order
       // of the packed key IS (part_a, part_b) lexicographic order, so
       // unpacking after the top-20 selection changes no result.
       Tables(spark, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          """flatten(transform(ps, (x, i) ->
-            |  transform(slice(ps, i + 2, size(ps)),
-            |            y -> shiftleft(x, 32) + y)))""".stripMargin))
-          .as("pp"))
+        .select(explode(packedPairs(col("ps"))).as("pp"))
         .groupBy(col("pp"))
         .agg(count(lit(1)).as("n_orders"))
         .orderBy(col("n_orders").desc, col("pp"))
@@ -339,11 +335,7 @@ object AnalyticsExtQ {
       // the top-20 selection, so the mined support set is unchanged.
       val pairs = li.groupBy(col("ok"))
         .agg(array_sort(collect_set(col("pk"))).as("ps"))
-        .select(explode(expr(
-          """flatten(transform(ps, (x, i) ->
-            |  transform(slice(ps, i + 2, size(ps)),
-            |            y -> shiftleft(x, 32) + y)))""".stripMargin))
-          .as("pp"))
+        .select(explode(packedPairs(col("ps"))).as("pp"))
         .groupBy(col("pp"))
         .agg(count(lit(1)).as("n_pair"))
         .orderBy(col("n_pair").desc, col("pp"))

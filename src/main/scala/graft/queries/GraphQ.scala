@@ -215,16 +215,12 @@ object GraphQ {
     // Packed pair key (r18): pairs are emitted and aggregated as one long
     // `(x << 32) | y` instead of a struct — 8-byte primitive grouping key
     // on the mining shuffle, unpacked map-side after the aggregate (the
-    // x_copurchase rationale; sorted-set emission guarantees x < y and
-    // part keys sit far below 2^31 at every gated decade).
+    // x_copurchase rationale; sorted-set emission guarantees x < y, and
+    // `packedPairs` fails the query if a part key reaches 2^31).
     Tables(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(slice(ps, i + 2, size(ps)),
-          |            y -> shiftleft(x, 32) + y)))""".stripMargin))
-        .as("pp"))
+      .select(explode(graft.ops.ColumnOps.packedPairs(col("ps"))).as("pp"))
       .groupBy(col("pp"))
       .agg(count(lit(1)).as("n_pair"))
       .select(shiftright(col("pp"), 32).as("x"),

@@ -216,6 +216,8 @@ object MultimodalQ {
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text")) // explicit projection: the typed
       // map is opaque to column pruning (guide §2.3)
+      .filter(col("doc_id").isNotNull) // a row without an id cannot be
+      // reported, and the typed Long decode would throw on it
       .as[(Long, String)]
       .map { case (id, text) => (id, phashFp(text)) }
       .toDF("doc_id", "fp")

@@ -12,19 +12,14 @@ import org.apache.spark.sql.functions._
   * collisions / probe coverage), SQ8/PQ scan everything but compress the
   * per-candidate arithmetic (recall bounded by quantization error).
   *
-  * Usage: sbt "runMain graft.tools.AnnProbe [sfDir ...]"
+  * Usage: tools/run_main.sh graft.tools.Probe ann [sfDir ...]
   * (default /root/testdata/sf0.1). Results recorded in SCALE.md.
   */
-object AnnProbe {
-  def main(args: Array[String]): Unit = {
-    val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+object AnnProbe extends Subcommand {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
+    val dirs = if (args.nonEmpty) args else Seq("/root/testdata/sf0.1")
     for (dir <- dirs) probe(spark, dir)
-    spark.stop()
+    0
   }
 
   private def collectTopk(df: DataFrame): Map[Long, Seq[Long]] =
@@ -87,15 +82,10 @@ object AnnProbe {
     println(f"== AnnProbe $dir (n=$n, queries=$nq) — recall vs candidates/query ==")
     println(f"${"variant"}%-16s ${"k"}%3s ${"recall@k"}%9s ${"cand/query"}%12s ${"vs brute"}%9s")
     for ((name, k, cand) <- variants) {
-      val approx = collectTopk(graft.SparkEntry.queries(name)(spark, dir))
-      val recalls = exact.toSeq.map { case (q, ex) =>
-        val want = ex.take(k).toSet
-        val got = approx.getOrElse(q, Nil).take(k).toSet
-        (want & got).size.toDouble / k
-      }
-      val recall = recalls.sum / recalls.size
+      val recall = recallAt(k, exact,
+        collectTopk(graft.SparkEntry.queries(name)(spark, dir)))
       println(f"$name%-16s $k%3d $recall%9.3f ${cand}%12.0f ${cand / full * 100}%8.1f%%")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Harness.release(spark)
     }
 
     // PQ codebook-sizing bracket (round 13): SAME ADC machinery as
@@ -111,7 +101,7 @@ object AnnProbe {
         ("pq cb-corpus4", 4, None))) {
       val (recall, ncw) = pqRecall(spark, dir, exact, mod, bound)
       println(f"$lbl%-16s   5 $recall%9.3f ${full}%12.0f ${100.0}%8.1f%% ($ncw codewords/subspace)")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Harness.release(spark)
     }
   }
 
@@ -155,11 +145,16 @@ object AnnProbe {
       .agg(sum(col("dp")).as("adc"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 5))
+    (recallAt(5, exact, approx), ncw)
+  }
+
+  /** Mean over the queries of `exact` of the share of each one's top `k`
+    * that `approx` also returns in its top `k`. */
+  private def recallAt(k: Int, exact: Map[Long, Seq[Long]],
+                       approx: Map[Long, Seq[Long]]): Double = {
     val recalls = exact.toSeq.map { case (q, ex) =>
-      val want = ex.take(5).toSet
-      val got = approx.getOrElse(q, Nil).take(5).toSet
-      (want & got).size.toDouble / 5
+      (ex.take(k).toSet & approx.getOrElse(q, Nil).take(k).toSet).size.toDouble / k
     }
-    (recalls.sum / recalls.size, ncw)
+    recalls.sum / recalls.size
   }
 }

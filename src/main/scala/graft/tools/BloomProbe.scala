@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -24,57 +23,28 @@ import org.apache.spark.sql.functions._
   * is NEVER injected under defaults. The probe lowers the app-side gate
   * (100 MB) to see the behavior a 100 TB run gets for free. The metric
   * that matters is the join exchange's shuffle-write collapse: the wall
-  * delta at local[32] understates the win because a single box hides
+  * delta on one machine understates the win because a single box hides
   * network cost — on a cluster the pruned bytes are cross-node traffic.
   */
-object BloomProbe {
+object BloomProbe extends Subcommand {
+  override val confs: Seq[(String, String)] = Seq(
+    // force the shuffle-join regime the Bloom filter exists for
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+    // scale the app-side gate to the probe's data (default 10 GB
+    // targets cluster scans — the probe's first lesson)
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "100MB",
+    // the creation-side gate compares the dim's ESTIMATED size — without
+    // column stats the selective filter doesn't shrink the estimate, so
+    // the default 10 MB rejects any real-sized dim; a 100 TB deployment
+    // sets this to what it can afford to build (the filter itself stays
+    // small — it's a bitmap, not the rows)
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB")
 
-  private final class ShuffleStats extends SparkListener {
-    val writes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) writes += m.shuffleWriteMetrics.bytesWritten
-      }
-    def reset(): Unit = synchronized(writes.clear())
-    private def size: Int = synchronized(writes.length)
-    def quiesce(): Unit = { // async listener bus (see SkewProbe)
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
-    def totalShuffleMb(): Double = synchronized(writes.sum / 1e6)
-  }
-
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       s"${sys.props("java.io.tmpdir")}/graft_sf100")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // force the shuffle-join regime the Bloom filter exists for
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // scale the app-side gate to the probe's data (default 10 GB
-      // targets cluster scans — the probe's first lesson)
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "100MB")
-      // the creation-side gate compares the dim's ESTIMATED size — without
-      // column stats the selective filter doesn't shrink the estimate, so
-      // the default 10 MB rejects any real-sized dim; a 100 TB deployment
-      // sets this to what it can afford to build (the filter itself stays
-      // small — it's a bitmap, not the rows)
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stats = new ShuffleStats
-    spark.sparkContext.addSparkListener(stats)
+    val stats = new graft.StageMetrics(spark)
 
     val fact = graft.Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"))
@@ -84,29 +54,29 @@ object BloomProbe {
       .filter(col("o_totalprice") > 60000.0 && col("o_totalprice") <= 61000.0)
       .select(col("o_orderkey"), col("o_orderpriority"))
 
-    def run(bloom: Boolean): Unit = {
+    def variant(bloom: Boolean): Unit = {
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", bloom.toString)
       val joined = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(col("l_extendedprice")).as("s"))
-      stats.reset()
+      stats.drain()
       val t0 = System.nanoTime()
       val n = joined.collect().map(_.getLong(1)).sum
       val wall = (System.nanoTime() - t0) / 1e9
-      stats.quiesce()
+      val shuffleWriteMb = stats.drain().map(_.shuffleWrite).sum / 1e6
       // Read the plan AFTER execution (ADVICE r14): under AQE the
       // finally-executed plan can differ from the pre-execution one, so
       // the injected flag must come from the final plan.
       val injected = joined.queryExecution.executedPlan.toString()
         .contains("might_contain")
       println(f"PROBE bloom=$bloom%-5s injected=$injected%-5s wall=$wall%6.2f s " +
-        f"rows=$n shuffleWriteMb=${stats.totalShuffleMb()}%9.1f")
+        f"rows=$n shuffleWriteMb=$shuffleWriteMb%9.1f")
     }
 
-    run(bloom = false) // also warms the OS page cache
-    run(bloom = false)
-    run(bloom = true)
-    run(bloom = true)
-    spark.stop()
+    variant(bloom = false) // also warms the OS page cache
+    variant(bloom = false)
+    variant(bloom = true)
+    variant(bloom = true)
+    0
   }
 }

@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   * mixture component (hash-uniform over K), matching the real table's
   * (vec_id, embedding, label) schema.
   *
-  * Run: `sbt "runMain graft.tools.MakeAnnFixture [n] [K]"` (default
+  * Run: `tools/run_main.sh graft.tools.Probe make-ann-fixture [n] [K]` (default
   * 2000 vectors / 20 centers — sf0.1-sized so AnnProbe's fixed query
   * cohort semantics carry over). Output: /tmp/graft_annmix<n>.
   */
-object MakeAnnFixture {
+object MakeAnnFixture extends Subcommand {
   val Dim = 64
   val CenterStd = 0.10
   val NoiseStd = 0.15
@@ -51,20 +51,15 @@ object MakeAnnFixture {
     base.select(col("vec_id"), emb.as("embedding"), col("c").cast("int").as("label"))
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val n = args.headOption.map(_.toLong).getOrElse(2000L)
     val k = if (args.length > 1) args(1).toInt else 20
     val out = s"/tmp/graft_annmix$n"
-    val spark = SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     if (!new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()) {
       mixture(spark, n, k).repartition(16)
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
       println(s"[annmix] wrote $n vectors / $k centers -> $out")
     } else println(s"[annmix] $out already present")
-    spark.stop()
+    0
   }
 }

@@ -23,18 +23,14 @@ import org.apache.spark.sql.functions._
   * (vec_id < 2000) stays the original 80 vectors while the searched
   * base grows f-fold — same convention as ScaleProbe.
   *
-  * Run: `sbt "runMain graft.tools.MakeSf [f]"` (default 10 ≈ sf1).
+  * Run: `tools/run_main.sh graft.tools.Probe make-sf [f]` (default 10 ≈
+  * sf1), from the sf dir `SPARK_GRAFT_SF_DIR` (default sf0.1).
   */
-object MakeSf {
-  def main(args: Array[String]): Unit = {
+object MakeSf extends Subcommand {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val f = args.headOption.map(_.toInt).getOrElse(10)
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val src = graft.Harness.sfDir
     val out = s"/tmp/graft_sf$f"
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC") // NTZ events normalize tz-free
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // key columns to remap as key*f + copy, per table
     val keyCols: Map[String, Seq[String]] = Map(
@@ -80,11 +76,7 @@ object MakeSf {
     val root = new java.io.File(out)
     if (root.exists() && !marker.exists()) {
       println(s"[makesf] $out exists without ${marker.getName} — rebuilding under the stride remap")
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(del))
-        f.delete(); ()
-      }
-      del(root)
+      graft.queries.Fixtures.deleteRecursively(root)
     }
 
     graft.Tables.names.foreach { name =>
@@ -113,6 +105,6 @@ object MakeSf {
       }
     }
     marker.createNewFile() // written LAST: all tables share one scheme
-    spark.stop()
+    0
   }
 }

@@ -17,17 +17,12 @@ import org.apache.spark.sql.functions._
   * The scatter key is a HASH of all columns (deterministic in the data,
   * not in the input layout), so the copy itself is reproducible.
   *
-  * Run: `sbt "runMain graft.tools.MakeShuffled [srcDir] [outDir]"`.
+  * Run: `tools/run_main.sh graft.tools.Probe make-shuffled [srcDir] [outDir]`.
   */
-object MakeShuffled {
-  def main(args: Array[String]): Unit = {
+object MakeShuffled extends Subcommand {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/graft_shuf_sf001")
-    val spark = SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     graft.Tables.names.foreach { name =>
       val dest = s"$out/$name.parquet"
       if (!new java.io.File(s"$dest/_SUCCESS").exists()) {
@@ -41,6 +36,6 @@ object MakeShuffled {
         println(s"[shuf] $name -> $dest")
       }
     }
-    spark.stop()
+    0
   }
 }

@@ -1,13 +1,12 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: formatted physical plans of the headline
   * queries with what-to-look-for notes. Run:
-  * `sbt "runMain graft.tools.Plans [sfDir] [outFile]"`.
+  * `tools/run_main.sh graft.tools.Probe plans [sfDir] [outFile]`.
   */
-object Plans {
+object Plans extends Subcommand {
   val picks: Seq[(String, String)] = Seq(
     "r7_range_filter" -> "events ts range filter: NanosPushdown puts raw-long bounds into PushedFilters",
     "j_broadcast" -> "dim-fact join: small side broadcast",
@@ -70,27 +69,20 @@ object Plans {
     "sql_udf_scalar" -> "SQL UDF inlining: no ScalaUDF/BatchEval node anywhere — the UDF chain resolves to plain arithmetic, filter on the UDF result sits below the aggregate in the scan stage",
     "sql_udf_table" -> "LATERAL table UDF: inlines to a Generate(explode) over the correlated sequence — a map-side expansion, no join node for the lateral, aggregate is the only shuffle")
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append(s"# PLANS — physical plans of headline queries ($sfDir, local[8])\n\n")
-    sb.append("Generated by `graft.tools.Plans`; regenerate with\n`sbt \"runMain graft.tools.Plans\"`. What to look for is noted per plan.\n")
+    sb.append(s"# PLANS — physical plans of headline queries ($sfDir, ${spark.sparkContext.master})\n\n")
+    sb.append("Generated by `graft.tools.Probe plans`; regenerate with\n`tools/run_main.sh graft.tools.Probe plans`. What to look for is noted per plan.\n")
     picks.foreach { case (name, note) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.count() // make AQE final plans real
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = Plan.finalPlan(spark, sfDir, name)
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
       sb.append(plan.linesIterator.take(60).mkString("\n"))
       sb.append("\n```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")
-    spark.stop()
+    0
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: synthesizes N× copies of the sf0.1 documents corpus
@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * driver collect, unbounded broadcast) shows super-linear growth here;
   * the shipped plans should track input size ~linearly.
   *
-  * Run: `sbt "runMain graft.tools.ScaleProbe [factors...]"` (default
-  * 1 8 64). Results recorded in SCALE.md.
+  * Run: `tools/run_main.sh graft.tools.Probe scale [factors...]` (default
+  * 1 8 64), from the sf dir `SPARK_GRAFT_SF_DIR` (default sf0.1). Results
+  * recorded in SCALE.md.
   */
-object ScaleProbe {
+object ScaleProbe extends Subcommand {
   private val probes = Seq(
     "t_gopher_quality", // map-only projection
     "d_exact_dedup",    // hash-agg on md5 fingerprint
@@ -56,91 +57,55 @@ object ScaleProbe {
                         //   explode work grows linearly, shuffle stays
                         //   64 rows x partitions at any size
 
-  def main(args: Array[String]): Unit = {
-    val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8, 64)
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, args: Seq[String]): Int = {
+    val factors = if (args.nonEmpty) args.map(_.toInt) else Seq(1, 8, 64)
+    val srcDir = graft.Harness.sfDir
 
-    factors.foreach { f =>
+    val results = factors.flatMap { f =>
       // v3: orders carries o_orderpriority for the w_cume_dist probe
       val dir = s"${sys.props("java.io.tmpdir")}/graft_scaleprobe_v3_${f}x"
-      if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-        graft.Tables(spark, srcDir, "documents")
-          .crossJoin(spark.range(f).select(col("id").as("copy")))
-          .select(
-            (col("doc_id") * f + col("copy")).as("doc_id"),
-            // uniquify: each copy appends a distinct token, so exact-dup
-            // collapse stays realistic and the vocabulary grows
-            concat(col("text"), lit(" uniq"), col("copy")).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
-      if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists()) {
-        graft.Tables(spark, srcDir, "embeddings")
-          .crossJoin(spark.range(f).select(col("id").as("copy")))
-          // copies land at vec_id >= 2000: the fixed query cohort stays
-          // the ORIGINAL 80 vectors while the searched base grows f-fold
-          .select((col("vec_id") + col("copy") * 2000L).as("vec_id"),
-            col("embedding"), col("label"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      }
-      if (!new java.io.File(s"$dir/lineitem.parquet/_SUCCESS").exists()) {
-        // partkey uniquified per copy: the AGGREGATED part grain (what the
-        // prefix sum consumes) grows f-fold, not just the fact rows.
-        // returnflag/quantity ride along for the weighted-median probe
-        // (whose VALUE grain stays constant under replication — the
-        // crossing-block window must stay flat while the scan grows).
-        graft.Tables(spark, srcDir, "lineitem")
-          .select(col("l_partkey"), col("l_extendedprice"),
-            col("l_returnflag"), col("l_quantity"))
-          .crossJoin(spark.range(f).select(col("id").as("copy")))
-          .select((col("l_partkey") * f + col("copy")).as("l_partkey"),
-            col("l_extendedprice"), col("l_returnflag"), col("l_quantity"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      }
-      if (!new java.io.File(s"$dir/orders.parquet/_SUCCESS").exists()) {
-        // orderkey uniquified; custkey KEPT, so j_pit_scd2's per-customer
-        // status history (its window grain) grows f-fold while the
-        // snapshot-diff join key space also grows f-fold
-        graft.Tables(spark, srcDir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-            col("o_orderdate"), col("o_totalprice"), col("o_orderpriority"))
-          .crossJoin(spark.range(f).select(col("id").as("copy")))
-          .select((col("o_orderkey") * f + col("copy")).as("o_orderkey"),
-            col("o_custkey"), col("o_orderstatus"), col("o_orderdate"),
-            col("o_totalprice"), col("o_orderpriority"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      }
-      if (!new java.io.File(s"$dir/customer.parquet/_SUCCESS").exists()) {
-        graft.Tables(spark, srcDir, "customer")
-          .select(col("c_custkey"), col("c_acctbal"))
-          .crossJoin(spark.range(f).select(col("id").as("copy")))
-          .select((col("c_custkey") * f + col("copy")).as("c_custkey"),
-            col("c_acctbal"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-      }
+      /** Writes `f` copies of `srcDir`'s table `name` as `cols` (over the
+        * table's columns plus the copy index `copy`), unless present. */
+      def scaled(name: String)(cols: Column*): Unit =
+        if (!new java.io.File(s"$dir/$name.parquet/_SUCCESS").exists())
+          graft.Tables(spark, srcDir, name)
+            .crossJoin(spark.range(f).select(col("id").as("copy")))
+            .select(cols: _*).repartition(32)
+            .write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      scaled("documents")(
+        (col("doc_id") * f + col("copy")).as("doc_id"),
+        // uniquify: each copy appends a distinct token, so exact-dup
+        // collapse stays realistic and the vocabulary grows
+        concat(col("text"), lit(" uniq"), col("copy")).as("text"),
+        col("lang"), col("source"), col("n_chars"))
+      // copies land at vec_id >= 2000: the fixed query cohort stays
+      // the ORIGINAL 80 vectors while the searched base grows f-fold
+      scaled("embeddings")((col("vec_id") + col("copy") * 2000L).as("vec_id"),
+        col("embedding"), col("label"))
+      // partkey uniquified per copy: the AGGREGATED part grain (what the
+      // prefix sum consumes) grows f-fold, not just the fact rows.
+      // returnflag/quantity ride along for the weighted-median probe
+      // (whose VALUE grain stays constant under replication — the
+      // crossing-block window must stay flat while the scan grows).
+      scaled("lineitem")((col("l_partkey") * f + col("copy")).as("l_partkey"),
+        col("l_extendedprice"), col("l_returnflag"), col("l_quantity"))
+      // orderkey uniquified; custkey KEPT, so j_pit_scd2's per-customer
+      // status history (its window grain) grows f-fold while the
+      // snapshot-diff join key space also grows f-fold
+      scaled("orders")((col("o_orderkey") * f + col("copy")).as("o_orderkey"),
+        col("o_custkey"), col("o_orderstatus"), col("o_orderdate"),
+        col("o_totalprice"), col("o_orderpriority"))
+      scaled("customer")((col("c_custkey") * f + col("copy")).as("c_custkey"),
+        col("c_acctbal"))
       val rows = spark.read.parquet(s"$dir/documents.parquet").count()
-      probes.foreach { q =>
-        val fn = graft.SparkEntry.queries(q)
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[scale] ${f}%3dx ($rows%7d docs) $q%-18s ${times.min}%7.2f s")
+      probes.map { q =>
+        val best = Time.passes(spark, dir, q, 2, graft.SparkEntry.queries(q))
+          .map(_.map(_.total).min)
+        println(f"[scale] ${f}%3dx ($rows%7d docs) $q%-18s " +
+          best.fold("FAILED")(t => f"$t%7.2f s"))
+        best
       }
     }
-    spark.stop()
+    if (results.forall(_.isDefined)) 0 else 1
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -31,65 +30,32 @@ import org.apache.spark.sql.functions._
   * Reported per variant: wall seconds, join-stage task count, max and
   * median task ms — the spread collapse (max/median → ~1) is the win.
   */
-object SkewProbe {
+object SkewProbe extends Subcommand {
+  override val confs: Seq[(String, String)] = Seq(
+    // keep the join a sort-merge join: broadcast would bypass both the
+    // skew and the splitter
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+    // scale AQE's size gates down to the probe's data (see scaladoc)
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+    // coalescing would merge the 99 small partitions and muddy the
+    // task-count comparison; leave partitions as sized
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
-  private final class TaskStats extends SparkListener {
-    val durations = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      durations += ((t.stageId, t.taskInfo.duration))
-    }
-    def reset(): Unit = synchronized(durations.clear())
-    private def size: Int = synchronized(durations.length)
-    /** Listener-bus delivery is async: wait until no new TaskEnd has
-      * arrived for 500 ms (bounded at 10 s) before reading, so a variant
-      * neither misses trailing events nor inherits the previous one's. */
-    def quiesce(): Unit = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
-    /** (task count, max ms, median ms) of the BOTTLENECK stage — the one
-      * holding the longest single task. Wall-clock is gated on that task;
-      * by-total-time selection flips between the (uniform) scan and the
-      * (skewed) join once the page cache warms, muddying the comparison. */
-    def heaviestStage(): (Int, Long, Long) = synchronized {
-      if (durations.isEmpty) (0, 0L, 0L)
-      else {
-        val byStage = durations.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted)
-        val (_, ds) = byStage.maxBy(_._2.last)
-        (ds.length, ds.last, ds(ds.length / 2))
-      }
-    }
-  }
+  /** (task count, max ms, median ms) of the BOTTLENECK stage — the one
+    * holding the longest single task. Wall-clock is gated on that task;
+    * by-total-time selection flips between the (uniform) scan and the
+    * (skewed) join once the page cache warms, muddying the comparison. */
+  private def heaviestStage(stages: Seq[graft.StageMetrics.Stage]): (Int, Long, Long) =
+    stages.filter(_.taskMs.nonEmpty).map(_.taskMs.sorted).maxByOption(_.last)
+      .fold((0, 0L, 0L))(ds => (ds.length, ds.last, ds(ds.length / 2)))
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       s"${sys.props("java.io.tmpdir")}/graft_sf100")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep the join a sort-merge join: broadcast would bypass both the
-      // skew and the splitter
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // scale AQE's size gates down to the probe's data (see scaladoc)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      // coalescing would merge the 99 small partitions and muddy the
-      // task-count comparison; leave partitions as sized
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
+    val stats = new graft.StageMetrics(spark)
 
     // One hot key (0) holding ~30% of the fact, 99 normal keys.
     val fact = graft.Tables(spark, dir, "lineitem")
@@ -100,26 +66,25 @@ object SkewProbe {
     val dim = spark.range(100).select(col("id").as("k"),
       concat(lit("grp_"), col("id") % 10).as("grp"))
 
-    def run(skewJoin: Boolean): Unit = {
+    def variant(skewJoin: Boolean): Unit = {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewJoin.toString)
-      stats.reset()
+      stats.drain()
       val t0 = System.nanoTime()
       val n = fact.join(dim, "k")
         .groupBy(col("grp"))
         .agg(sum(col("l_extendedprice")).as("s"), count(lit(1)).as("n"))
         .collect().map(_.getLong(2)).sum
       val wall = (System.nanoTime() - t0) / 1e9
-      stats.quiesce() // async listener bus: drain before reading/resetting
-      val (tasks, maxMs, medMs) = stats.heaviestStage()
+      val (tasks, maxMs, medMs) = heaviestStage(stats.drain())
       println(f"PROBE skewJoin=$skewJoin%-5s wall=$wall%6.2f s rows=$n " +
         f"joinStageTasks=$tasks maxTaskMs=$maxMs medianTaskMs=$medMs " +
         f"spread=${maxMs.toDouble / math.max(1, medMs)}%.1fx")
     }
 
-    run(skewJoin = false) // also warms the input cache
-    run(skewJoin = false)
-    run(skewJoin = true)
-    run(skewJoin = true)
-    spark.stop()
+    variant(skewJoin = false) // also warms the input cache
+    variant(skewJoin = false)
+    variant(skewJoin = true)
+    variant(skewJoin = true)
+    0
   }
 }

@@ -11,18 +11,13 @@ import org.apache.spark.sql.streaming.Trigger
   * state store as TWS requires; checkpoint under /tmp so a re-run is a
   * fresh stream (delete to re-measure).
   *
-  * Run: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.SpanStreamProbe"`.
+  * Run: `SPARK_GRAFT_SF_DIR=<sfDir> tools/run_main.sh graft.tools.Probe span-stream`.
   */
-object SpanStreamProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object SpanStreamProbe extends Subcommand {
+  override val confs: Seq[(String, String)] = Seq(Subcommand.rocksDb)
+
+  def run(spark: SparkSession, args: Seq[String]): Int = {
+    val dir = graft.Harness.sfDir
     import spark.implicits._
 
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
@@ -57,6 +52,6 @@ object SpanStreamProbe {
     val nDups = spark.table("span_probe").filter($"dup").count()
     println(f"SPANSTREAM docs=$nDocs spans=$nSpans dups=$nDups wall=$secs%.2f s " +
       f"docs_per_s=${nDocs / secs}%.0f spans_per_s=${nSpans / secs}%.0f")
-    spark.stop()
+    0
   }
 }

@@ -31,24 +31,23 @@ class ProbeListener extends StreamingQueryListener {
   * floor tells you WHAT a replay costs; this tells you WHERE inside the
   * stream run it goes (fixed per-batch cost vs start/stop vs sink).
   *
-  * Usage: tools/run_main.sh graft.tools.StreamProbe st_join_replay ...
+  * Usage: tools/run_main.sh graft.tools.Probe stream st_join_replay ...
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
   */
-object StreamProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.streamingQueryListeners", "graft.tools.ProbeListener")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object StreamProbe extends Subcommand {
+  /** Registers [[ProbeListener]] (`graft.tools.ProbeListener`) by class
+    * name; Spark instantiates it through its zero-arg constructor. */
+  override val confs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.streamingQueryListeners" -> classOf[ProbeListener].getName)
+
+  def run(spark: SparkSession, args: Seq[String]): Int = {
+    val dir = graft.Harness.sfDir
     for (name <- args; i <- 1 to 2) {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir).count()
       println(f"[probe] $name pass$i total ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Harness.release(spark)
     }
-    spark.stop()
+    0
   }
 }

@@ -17,19 +17,14 @@ import java.nio.file.Files
   * per batch grow 100x, batch count fixed) or with STATE REOPENS
   * (unhealthy: fixed per-batch floor dominating at both scales).
   *
-  * Usage: tools/run_main.sh graft.tools.StreamScaleProbe <sfDir>
+  * Usage: tools/run_main.sh graft.tools.Probe stream-scale <sfDir>
   */
-object StreamScaleProbe {
-  def main(args: Array[String]): Unit = {
+object StreamScaleProbe extends Subcommand {
+  override val confs: Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> "4") // the tuned replay conf
+
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-stream-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "4") // the tuned replay conf
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     def report(tag: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -64,8 +59,7 @@ object StreamScaleProbe {
 
     // 2. transformWithState running totals (the st_running_totals shape).
     {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set(Subcommand.rocksDb._1, Subcommand.rocksDb._2)
       val landing = graft.queries.StreamingReplayQ.sessionLandingDir(spark, dir)
       val sink = Files.createTempDirectory("graft_ssp_tws_sink").toString
       val ckpt = Files.createTempDirectory("graft_ssp_tws_ckpt").toString
@@ -82,7 +76,6 @@ object StreamScaleProbe {
       report("tws_totals", q)
       Seq(sink, ckpt).foreach(p => graft.queries.Fixtures.deleteRecursively(new java.io.File(p)))
     }
-
-    spark.stop()
+    0
   }
 }

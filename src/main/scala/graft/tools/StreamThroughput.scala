@@ -1,10 +1,9 @@
 package graft.tools
 
 import graft.ops.LabelRule
-import graft.pcap.{PcapFormat, PcapRecord}
 import graft.pipeline.BytesPipeline
-import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 
 /** Streaming-flagship throughput measurement (BASELINE.md evidence): the
   * same synthetic capture the batch `Throughput` tool uses, laid out as a
@@ -24,10 +23,10 @@ import java.nio.file.{Files, Paths}
   * the widened 1532-column layout is a sink-format choice already
   * golden-tested elsewhere; here it would only multiply parquet volume.
   *
-  * Run: `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.StreamThroughput"`.
+  * Run: `SPARK_DRIVER_MEM=48g tools/run_main.sh graft.tools.Probe stream-throughput`.
   */
-object StreamThroughput {
-  def main(args: Array[String]): Unit = {
+object StreamThroughput extends Subcommand {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val n = args.headOption.map(_.toInt).getOrElse(12000000)
     val nFiles = 128
     val watchDir = Paths.get(s"/tmp/graft_stream_watch_${n}_f$nFiles")
@@ -36,26 +35,9 @@ object StreamThroughput {
       Files.createDirectories(watchDir)
       val rnd = new scala.util.Random(7)
       val perFile = n / nFiles
-      var f = 0
-      while (f < nFiles) {
-        val out = new BufferedOutputStream(
-          new FileOutputStream(watchDir.resolve(f"part_$f%04d.pcap").toFile), 1 << 20)
-        out.write(PcapFormat.write(Seq.empty)) // global header
-        var i = 0
-        while (i < perFile) {
-          val g = f.toLong * perFile + i // global index keeps the mix stable
-          val appLen = rnd.nextInt(560)
-          val frame = graft.queries.PipelineQ.mkFrame(
-            s"192.168.10.${g % 9 + 1}", s"10.0.0.${g % 7 + 1}",
-            (1024 + (g % 5000)).toInt, if (g % 3 == 0) 443 else 53,
-            if (g % 3 == 0) 6 else 17, appLen, 0x2A.toByte)
-          val rec = PcapFormat.write(Seq(PcapRecord(1499350000.0 + g * 0.001, frame)))
-          out.write(rec, 24, rec.length - 24) // strip repeated global header
-          i += 1
-        }
-        out.close()
-        f += 1
-      }
+      for (f <- 0 until nFiles) // global packet index keeps the mix stable
+        Throughput.writeCapture(watchDir.resolve(f"part_$f%04d.pcap"),
+          f.toLong * perFile, perFile, rnd)
       Files.write(done, Array.emptyByteArray)
     }
     val inputBytes = {
@@ -63,12 +45,6 @@ object StreamThroughput {
       try listing.toArray.map(p => Files.size(p.asInstanceOf[java.nio.file.Path])).sum
       finally listing.close() // Files.list holds a directory fd until closed
     }
-
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val cfg = BytesPipeline.Config(
       rules = Seq(LabelRule(1499350000.0, 1499352000.0,
@@ -79,12 +55,7 @@ object StreamThroughput {
     // fresh output+checkpoint per run — a surviving checkpoint would make
     // AvailableNow a no-op and time nothing
     val outDir = s"/tmp/graft_stream_out_$n"
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.delete(q))
-      }
-    rmTree(Paths.get(outDir))
+    graft.queries.Fixtures.deleteRecursively(new java.io.File(outDir))
 
     val t0 = System.nanoTime()
     val q = BytesPipeline.runStreaming(spark, watchDir.toString, outDir, cfg,
@@ -98,6 +69,6 @@ object StreamThroughput {
     println(f"STREAM packets=$n files=$nFiles input=${inputBytes / 1e6}%.0f MB " +
       f"rows_out=$rows batches=$batches wall=$secs%.1f s " +
       f"rate=${n / secs}%.0f pkt/s ${inputBytes / 1e6 / secs}%.1f MB/s")
-    spark.stop()
+    0
   }
 }

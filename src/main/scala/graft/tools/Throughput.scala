@@ -5,6 +5,7 @@ import graft.pipeline.BytesPipeline
 import graft.ops.LabelRule
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 
 /** Flagship throughput + at-scale split-correctness measurement (mirrors
   * BASELINE.md row): synthesizes a capture incrementally, runs the full
@@ -25,36 +26,14 @@ import java.nio.file.{Files, Paths}
   * identical bytes; the small-size split==whole equality lives in
   * BytesPipelineSpec.
   *
-  * Run: `sbt "runMain graft.tools.Throughput [nPackets]"`.
+  * Run: `tools/run_main.sh graft.tools.Probe throughput [nPackets]`.
   */
-object Throughput {
-  def main(args: Array[String]): Unit = {
+object Throughput extends Subcommand {
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     val n = args.headOption.map(_.toInt).getOrElse(2000000)
     val path = Paths.get(s"/tmp/graft_throughput_$n.pcap")
-    if (!Files.exists(path)) {
-      val rnd = new scala.util.Random(7)
-      val out = new BufferedOutputStream(new FileOutputStream(path.toFile), 1 << 20)
-      // global header via a tiny write() call, then records incrementally
-      out.write(PcapFormat.write(Seq.empty))
-      var i = 0
-      while (i < n) {
-        val appLen = rnd.nextInt(560)
-        val frame = graft.queries.PipelineQ.mkFrame(
-          s"192.168.10.${i % 9 + 1}", s"10.0.0.${i % 7 + 1}",
-          1024 + (i % 5000), if (i % 3 == 0) 443 else 53,
-          if (i % 3 == 0) 6 else 17, appLen, 0x2A.toByte)
-        val rec = PcapFormat.write(Seq(PcapRecord(1499350000.0 + i * 0.001, frame)))
-        out.write(rec, 24, rec.length - 24) // strip repeated global header
-        i += 1
-      }
-      out.close()
-    }
+    if (!Files.exists(path)) writeCapture(path, 0L, n, new scala.util.Random(7))
     val bytes = Files.size(path)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
 
     val cfg = BytesPipeline.Config(
@@ -95,7 +74,27 @@ object Throughput {
     val sig100 = signature(100L << 20)
     val ok = sig64 == sig100
     println(s"SPLIT_EQUALITY 64MB=$sig64 100MB=$sig100 ${if (ok) "OK" else "MISMATCH"}")
-    spark.stop()
-    if (!ok) sys.exit(1)
+    if (ok) 0 else 1
+  }
+
+  /** Writes packets `first until first + n` of the synthetic mix to a
+    * classic pcap at `path`: hosts, ports and protocol cycle with the
+    * packet index (so a capture cut into files keeps the mix), payload
+    * lengths come from `rnd`. Records are written one at a time, so the
+    * capture may exceed a JVM array. */
+  private[tools] def writeCapture(path: java.nio.file.Path, first: Long, n: Int,
+                                  rnd: scala.util.Random): Unit = {
+    val out = new BufferedOutputStream(new FileOutputStream(path.toFile), 1 << 20)
+    try {
+      out.write(PcapFormat.write(Seq.empty)) // global header
+      for (g <- first until first + n) {
+        val frame = graft.queries.PipelineQ.mkFrame(
+          s"192.168.10.${g % 9 + 1}", s"10.0.0.${g % 7 + 1}",
+          (1024 + g % 5000).toInt, if (g % 3 == 0) 443 else 53,
+          if (g % 3 == 0) 6 else 17, rnd.nextInt(560), 0x2A.toByte)
+        val rec = PcapFormat.write(Seq(PcapRecord(1499350000.0 + g * 0.001, frame)))
+        out.write(rec, 24, rec.length - 24) // strip repeated global header
+      }
+    } finally out.close()
   }
 }

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** One-shot probe for reading a transformWithState checkpoint through
   * the state data source: runs [[graft.streaming.StreamingOps.runningTotals]]
@@ -12,57 +11,28 @@ import java.nio.file.Files
   * prints the exact key/value schema — the ground truth the
   * st_state_repartition migration path pins.
   *
-  * Usage: tools/run_main.sh graft.tools.TwsStateProbe /root/testdata/sf0.001
+  * Usage: tools/run_main.sh graft.tools.Probe tws-state <sfDir>
   */
-object TwsStateProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("graft-tws-state-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object TwsStateProbe extends Subcommand {
+  override val confs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "4", Subcommand.rocksDb)
+
+  def run(spark: SparkSession, args: Seq[String]): Int = {
     import spark.implicits._
-
-    val ev = graft.Tables(spark, dir, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val landing = Files.createTempDirectory("graft_twsprobe_landing").toString
-    ev.repartition(2).write.mode("overwrite").parquet(landing)
-
-    val sink = Files.createTempDirectory("graft_twsprobe_sink").toString
-    val ckpt = Files.createTempDirectory("graft_twsprobe_ckpt").toString
-    val schema = spark.read.parquet(landing).schema
-    val q = graft.streaming.StreamingOps.runningTotals(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(landing).as[graft.streaming.Event])
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-        b.write.mode("append").parquet(sink); ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    println("=== state-metadata ===")
-    val meta = spark.read.format("state-metadata").load(ckpt)
-    meta.printSchema()
-    meta.show(20, truncate = false)
-
-    println("=== statestore stateVarName=totals ===")
-    val st = spark.read.format("statestore")
-      .option("path", ckpt).option("stateVarName", "totals").load()
-    st.printSchema()
-    st.show(10, truncate = false)
-    println("state rows: " + st.count() +
-      "  distinct users: " + ev.select(countDistinct(col("user_id"))).head().getLong(0))
-
-    Seq(landing, sink, ckpt).foreach(p =>
-      graft.queries.Fixtures.deleteRecursively(new java.io.File(p)))
-    spark.stop()
+    StateProbe.probeState(spark, args.headOption.getOrElse("/root/testdata/sf0.001"), 2,
+        Map("stateVarName" -> "totals"))(
+      (landing, sink, ckpt) => graft.streaming.StreamingOps.runningTotals(
+          landing.as[graft.streaming.Event])
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
+          b.write.mode("append").parquet(sink); ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()) { (st, ev) =>
+      println("state rows: " + st.count() +
+        "  distinct users: " + ev.select(countDistinct(col("user_id"))).head().getLong(0))
+    }
+    0
   }
 }

@@ -60,4 +60,15 @@ class PhashEdgeSpec extends SparkSpec {
       else assert(a == reps(fps(a)) && b == reps(fps(b)), s"ham=1 edge off-representative: ($a,$b)")
     }
   }
+
+  test("fingerprints skip a document without a doc_id") {
+    withTempDir("graft_phash_null") { tmp =>
+      import spark.implicits._
+      Seq[(java.lang.Long, String)]((1L, "alpha beta"), (null, "gamma"), (3L, "delta"))
+        .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+      val ids = MultimodalQ.phashFingerprints(spark, tmp.toString)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 3L))
+    }
+  }
 }

@@ -2,10 +2,13 @@
 # Run a graft main class against the compiled classes + the local Spark
 # jars WITHOUT sbt (so long-running scale probes don't hold the sbt build
 # lock). Usage: tools/run_main.sh [-JXmx48g] <mainClass> [args...]
+# The heap is SPARK_DRIVER_MEM (as in build.sbt), 48g when unset; a -J
+# flag overrides it.
 # Env: SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR etc. pass through untouched.
+# Tools: tools/run_main.sh graft.tools.Probe <subcommand> [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
-HEAP="-Xmx48g"
+HEAP="-Xmx${SPARK_DRIVER_MEM:-48g}"
 if [[ "${1:-}" == -J* ]]; then HEAP="-${1#-J}"; shift; fi
 exec java "$HEAP" -XX:+IgnoreUnrecognizedVMOptions \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
