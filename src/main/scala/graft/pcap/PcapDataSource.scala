@@ -22,7 +22,12 @@ import scala.jdk.CollectionConverters._
   * pcap`. planInputPartitions() emits one byte-range [[PcapInputPartition]]
   * per ~`splitBytes` of each file ([[PcapSource.planSplits]]), so a
   * multi-GB capture runs as one task per split with no shuffle and no
-  * driver-side data scan.
+  * driver-side data scan. Each task frames its byte range with the same
+  * walker as the whole-file reader ([[PcapSource.readSplit]]): a file
+  * that fits in one split reads exactly as [[PcapSource.packets]] reads
+  * it, multi-section pcapng and late IDBs included, and a file of many
+  * splits does when its sections and interfaces are declared in its
+  * first 64 KiB ([[PcapngFormat.SectionMeta]]).
   *
   * Options: `splitBytes` (default 128 MiB, at most
   * [[PcapSource.MaxSplitBytes]]), `ipv6` (default false). Reference

@@ -32,22 +32,28 @@ object PcapFormat {
   val GlobalHeaderLen = 24
   val RecordHeaderLen = 16
 
-  final case class Header(order: ByteOrder, fracDivisor: Double, snaplen: Int)
+  final case class Header(order: ByteOrder, fracDivisor: Double)
+
+  /** How many consecutive record headers must chain-parse before an
+    * offset counts as a record boundary. */
+  private[pcap] val ResyncChain = 4
+  /** Largest credible captured frame; bounds both resync scanning and the
+    * cross-split record overhang. */
+  val MaxFrame = 262144
+  /** Largest credible record: header plus [[MaxFrame]]. */
+  val MaxRecord: Int = RecordHeaderLen + MaxFrame
 
   /** Parse the 24-byte global header; None for non-pcap bytes. */
   def header(buf: Array[Byte]): Option[Header] = {
     if (buf.length < GlobalHeaderLen) return None
     val magicBE = ByteBuffer.wrap(buf, 0, 4).order(ByteOrder.BIG_ENDIAN).getInt
-    val (order, div) = magicBE match {
-      case MagicMicro        => (ByteOrder.BIG_ENDIAN, 1e6)
-      case MagicMicroSwapped => (ByteOrder.LITTLE_ENDIAN, 1e6)
-      case MagicNano         => (ByteOrder.BIG_ENDIAN, 1e9)
-      case MagicNanoSwapped  => (ByteOrder.LITTLE_ENDIAN, 1e9)
-      case _                 => return None
+    magicBE match {
+      case MagicMicro        => Some(Header(ByteOrder.BIG_ENDIAN, 1e6))
+      case MagicMicroSwapped => Some(Header(ByteOrder.LITTLE_ENDIAN, 1e6))
+      case MagicNano         => Some(Header(ByteOrder.BIG_ENDIAN, 1e9))
+      case MagicNanoSwapped  => Some(Header(ByteOrder.LITTLE_ENDIAN, 1e9))
+      case _                 => None
     }
-    val bb = ByteBuffer.wrap(buf, 0, GlobalHeaderLen).order(order)
-    val snaplen = bb.getInt(16)
-    Some(Header(order, div, snaplen))
   }
 
   /** Lazily iterate records from an in-memory capture image — classic
@@ -58,48 +64,68 @@ object PcapFormat {
     */
   def records(buf: Array[Byte]): Iterator[PcapRecord] =
     if (PcapngFormat.isPcapng(buf)) PcapngFormat.records(buf)
-    else classicRecords(buf)
+    else header(buf).fold(Iterator.empty[PcapRecord])(walk(buf, 0L, buf.length, buf.length, _))
 
-  private def classicRecords(buf: Array[Byte]): Iterator[PcapRecord] = header(buf) match {
-    case None => Iterator.empty
-    case Some(h) =>
-      new Iterator[PcapRecord] {
-        private var off = GlobalHeaderLen
-        private var nextRec: PcapRecord = _
-        private var done = false
+  /** The classic record walker, for a whole image and for one byte-range
+    * split alike. `buf` holds the file's bytes from offset `base` on; the
+    * walk emits the records whose header starts before file offset `end`
+    * and stops quietly at the first record the buffer does not hold
+    * whole. A buffer that starts at or before the first record
+    * (`base <= GlobalHeaderLen`) is aligned; any other is resynchronized:
+    * records carry no sync marker, so the walk starts at the first offset
+    * where a chain of [[ResyncChain]] record headers parses with sane
+    * lengths — a false positive must forge k plausible headers in a row.
+    * No such offset within one record's reach of the start means no
+    * records.
+    */
+  def walk(buf: Array[Byte], base: Long, end: Long, fileLen: Long, h: Header): Iterator[PcapRecord] = {
+    val bb = ByteBuffer.wrap(buf).order(h.order)
+    def u32(off: Int): Long = if (off + 4 <= buf.length) bb.getInt(off) & 0xffffffffL else -1L
 
-        private def advance(): Unit = {
-          if (off + RecordHeaderLen > buf.length) { done = true; return }
-          val bb = ByteBuffer.wrap(buf, off, RecordHeaderLen).order(h.order)
-          val tsSec = bb.getInt & 0xffffffffL
-          val tsFrac = bb.getInt & 0xffffffffL
-          val inclLen = bb.getInt
-          if (inclLen < 0 || off + RecordHeaderLen + inclLen > buf.length) {
-            done = true; return // truncated capture: flush-and-finish
-          }
-          val frame = java.util.Arrays.copyOfRange(
-            buf, off + RecordHeaderLen, off + RecordHeaderLen + inclLen)
-          nextRec = PcapRecord(tsSec + tsFrac / h.fracDivisor, frame)
-          off += RecordHeaderLen + inclLen
-        }
+    // A header at `off` is plausible if incl_len is sane and, recursively,
+    // the following ResyncChain headers are too (or EOF is reached). The
+    // ANCHOR (depth == ResyncChain) must be fully verifiable inside the
+    // buffer — a candidate whose claimed length jumps past the readable
+    // range would otherwise self-certify (every continuation check would
+    // hit "beyond buffer"), which is exactly how a payload word that
+    // happens to look like a huge-but-sane incl_len forges a sync point.
+    // A TRUE anchor always fits: a split's buffer overhangs its end by one
+    // max-size record, and near EOF it extends to fileLen. A link past a
+    // buffer that reaches EOF is no record at all (a zero-length record's
+    // header, read one byte early, chains into one).
+    val cut = base + buf.length < fileLen
+    def chainOk(off: Int, depth: Int): Boolean = {
+      if (base + off >= fileLen) return true // clean EOF
+      if (off + RecordHeaderLen > buf.length)
+        return depth < ResyncChain && cut // unverifiable: ok mid-chain, never as anchor
+      val incl = u32(off + 8)
+      val orig = u32(off + 12)
+      if (incl < 0 || incl > MaxFrame || orig < incl || orig > MaxFrame) return false
+      if (off + RecordHeaderLen + incl > buf.length) return depth < ResyncChain && cut
+      depth <= 1 || chainOk(off + RecordHeaderLen + incl.toInt, depth - 1)
+    }
 
-        override def hasNext: Boolean = {
-          if (!done && nextRec == null) advance()
-          !done && nextRec != null
-        }
-        override def next(): PcapRecord = {
-          if (!hasNext) throw new NoSuchElementException
-          val r = nextRec; nextRec = null; r
-        }
-      }
+    val first =
+      if (base <= GlobalHeaderLen) (GlobalHeaderLen - base).toInt
+      else (0 until math.min(buf.length, MaxRecord)).find(chainOk(_, ResyncChain)).getOrElse(buf.length)
+    Iterator.unfold(first) { off =>
+      val from = off + RecordHeaderLen
+      val incl = u32(off + 8)
+      if (base + off >= end || from > buf.length || incl < 0 || from + incl > buf.length) None
+      else Some((PcapRecord(u32(off) + u32(off + 4) / h.fracDivisor,
+        java.util.Arrays.copyOfRange(buf, from, from + incl.toInt)), from + incl.toInt))
+    }
   }
 
-  /** Serialize records back to classic pcap bytes (micro, big-endian).
-    * Used by tests/fixtures; the engine itself only reads.
+  /** Serialize records back to classic pcap bytes (micro unless `nanos`,
+    * big-endian unless `littleEndian`). Used by tests/fixtures; the engine
+    * itself only reads.
     */
-  def write(records: Seq[PcapRecord], nanos: Boolean = false): Array[Byte] = {
+  def write(records: Seq[PcapRecord], nanos: Boolean = false,
+            littleEndian: Boolean = false): Array[Byte] = {
     val body = records.map(r => RecordHeaderLen + r.frame.length).sum
-    val bb = ByteBuffer.allocate(GlobalHeaderLen + body).order(ByteOrder.BIG_ENDIAN)
+    val bb = ByteBuffer.allocate(GlobalHeaderLen + body)
+      .order(if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
     bb.putInt(if (nanos) MagicNano else MagicMicro)
     bb.putShort(2.toShort).putShort(4.toShort) // version 2.4
     bb.putInt(0).putInt(0).putInt(65535).putInt(1) // zone, sigfigs, snaplen, LINKTYPE_ETHERNET

@@ -40,6 +40,9 @@ object PcapngFormat {
   val EpbType = 6
   /** block framing: type + 2× total length */
   val FramingLen = 12
+  /** Largest credible block (frame + framing + options slack); bounds
+    * resync scanning and the cross-split overhang. */
+  val MaxBlock: Int = PcapFormat.MaxFrame + 4096
 
   /** The SHB type field reads the same under either byte order, so this
     * is order-independent. */
@@ -84,108 +87,149 @@ object PcapngFormat {
     * interface table). Non-pcapng input yields no records; a truncated
     * tail stops quietly.
     */
-  def records(buf: Array[Byte]): Iterator[PcapRecord] = {
-    if (!isPcapng(buf)) return Iterator.empty
-    new Iterator[PcapRecord] {
-      private var off = 0
-      private var order: ByteOrder = ByteOrder.BIG_ENDIAN
-      private val ifaces = ArrayBuffer.empty[IfaceTs]
-      private var nextRec: PcapRecord = _
-      private var done = false
+  def records(buf: Array[Byte]): Iterator[PcapRecord] =
+    if (!isPcapng(buf)) Iterator.empty
+    else walk(buf, 0L, buf.length, buf.length, FileStart)
 
-      private def u32(o: Int): Long =
-        ByteBuffer.wrap(buf, o, 4).order(order).getInt & 0xffffffffL
-
-      private def advance(): Unit = {
-        while (!done && nextRec == null) {
-          if (off + FramingLen > buf.length) { done = true; return }
-          // SHB first: its type is order-palindromic and it RESETS order
-          val beType = ByteBuffer.wrap(buf, off, 4).order(ByteOrder.BIG_ENDIAN).getInt
-          if (beType == ShbType) {
-            if (off + 12 > buf.length) { done = true; return }
-            val magicBE = ByteBuffer.wrap(buf, off + 8, 4).order(ByteOrder.BIG_ENDIAN).getInt
-            order =
-              if (magicBE == ByteOrderMagic) ByteOrder.BIG_ENDIAN
-              else if (Integer.reverseBytes(magicBE) == ByteOrderMagic) ByteOrder.LITTLE_ENDIAN
-              else { done = true; return } // corrupt section header
-            ifaces.clear() // new section, new interface table
-          }
-          val totalLen = u32(off + 4)
-          if (totalLen < FramingLen || totalLen % 4 != 0 ||
-              off + totalLen > buf.length) { done = true; return } // truncated
-          val blockType = u32(off).toInt
-          val bodyStart = off + 8
-          val bodyEnd = off + totalLen.toInt - 4
-          blockType match {
-            case IdbType if bodyEnd - bodyStart >= 8 =>
-              ifaces += ifaceTsOpts(buf, order, bodyStart + 8, bodyEnd)
-            case EpbType if bodyEnd - bodyStart >= 20 =>
-              val bb = ByteBuffer.wrap(buf).order(order)
-              val ifc = bb.getInt(bodyStart)
-              val ts64 = (bb.getInt(bodyStart + 4).toLong << 32) |
-                (bb.getInt(bodyStart + 8) & 0xffffffffL)
-              val capLen = bb.getInt(bodyStart + 12)
-              if (capLen >= 0 && bodyStart + 20 + capLen <= bodyEnd) {
-                val ts =
-                  if (ifc >= 0 && ifc < ifaces.length) ifaces(ifc) else DefaultIfaceTs
-                nextRec = PcapRecord(ts.toSeconds(ts64),
-                  java.util.Arrays.copyOfRange(buf, bodyStart + 20, bodyStart + 20 + capLen))
-              }
-            case SpbType if bodyEnd - bodyStart >= 4 =>
-              val orig = ByteBuffer.wrap(buf).order(order).getInt(bodyStart)
-              val cap = math.min(math.max(orig, 0), bodyEnd - bodyStart - 4)
-              nextRec = PcapRecord(0.0,
-                java.util.Arrays.copyOfRange(buf, bodyStart + 4, bodyStart + 4 + cap))
-            case _ => // SHB handled above; unknown types skipped by length
-          }
-          off += totalLen.toInt
-        }
-      }
-
-      override def hasNext: Boolean = {
-        if (!done && nextRec == null) advance()
-        !done && nextRec != null
-      }
-      override def next(): PcapRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec; nextRec = null; r
-      }
-    }
-  }
-
-  /** Section metadata for split planning: byte order plus the interface
-    * timestamp table — (divisor, tsoffset) per IDB — collected from the
-    * file's LEADING blocks (one pass over the first `headBytes`).
-    * tcpdump/Wireshark declare every interface before the first packet
-    * block, which is the layout the splittable path supports; IDBs
-    * appearing later in the file are handled only by the whole-file
-    * reader. */
+  /** A section's state: byte order plus the interface timestamp table —
+    * (divisor, tsoffset) per IDB, in declaration order.
+    *
+    * Split planning takes each split's starting state from one walk over
+    * the file's first 64 KiB (the head): a split that starts inside the
+    * head begins from the state at its start, one that starts past it
+    * from the head's final state, and every split applies the SHBs and
+    * IDBs it meets itself. So a file that fits in one split reads the
+    * same split or whole, multi-section files and late IDBs included,
+    * and a file of many splits reads the same when its sections and
+    * interfaces are declared in the head — as tcpdump/Wireshark write
+    * them, every interface before the first packet block. */
   final case class SectionMeta(bigEndian: Boolean, ifaces: Seq[IfaceTs]) {
     def divisors: Seq[Double] = ifaces.map(_.divisor)
   }
+  /** The state before a file's first SHB, which replaces it. */
+  private val FileStart = SectionMeta(bigEndian = true, Nil)
 
-  def headMeta(head: Array[Byte]): Option[SectionMeta] = {
-    if (!isPcapng(head) || head.length < 12) return None
-    val magicBE = ByteBuffer.wrap(head, 8, 4).order(ByteOrder.BIG_ENDIAN).getInt
-    val order =
-      if (magicBE == ByteOrderMagic) ByteOrder.BIG_ENDIAN
-      else if (Integer.reverseBytes(magicBE) == ByteOrderMagic) ByteOrder.LITTLE_ENDIAN
-      else return None
-    val ifaces = ArrayBuffer.empty[IfaceTs]
-    var off = 0
-    val bb = ByteBuffer.wrap(head).order(order)
-    while (off + FramingLen <= head.length) {
-      val totalLen = bb.getInt(off + 4) & 0xffffffffL
-      if (totalLen < FramingLen || totalLen % 4 != 0 ||
-          off + totalLen > head.length) {
-        return Some(SectionMeta(order == ByteOrder.BIG_ENDIAN, ifaces.toSeq))
-      }
-      val t = bb.getInt(off)
-      if (t == IdbType && totalLen >= FramingLen + 8)
-        ifaces += ifaceTsOpts(head, order, off + 16, off + totalLen.toInt - 4)
-      off += totalLen.toInt
+  /** The section state after the blocks of `head` (a file's leading
+    * bytes); None unless it opens with a valid SHB. */
+  def headMeta(head: Array[Byte]): Option[SectionMeta] =
+    sectionsAt(head, Seq(head.length.toLong)).map(_.head)
+
+  /** The section state at each of the ascending file offsets `at`: the
+    * blocks of `head` whose header starts before it, applied in one walk.
+    * None unless `head` opens with a valid SHB. */
+  def sectionsAt(head: Array[Byte], at: Seq[Long]): Option[Seq[SectionMeta]] =
+    Option.when(isPcapng(head) && shbOrder(head, 0).isDefined) {
+      val w = new Walk(head, 0L, head.length, FileStart)
+      at.map { a => while (w.step(a) != null) (); w.section }
     }
-    Some(SectionMeta(order == ByteOrder.BIG_ENDIAN, ifaces.toSeq))
+
+  /** The pcapng block walker, for a whole image and for one byte-range
+    * split alike. `buf` holds the file's bytes from offset `base` on, and
+    * the walk starts in section state `from`. It emits the packet blocks
+    * whose header starts before file offset `end` and stops quietly at the
+    * first block the buffer does not hold whole. A buffer at the file
+    * start is aligned; any other is resynchronized to a BLOCK boundary: a
+    * sane 4-aligned total length whose TRAILER copy matches, chained
+    * across [[PcapFormat.ResyncChain]] consecutive blocks, so a false
+    * positive needs k forged length-sandwiches in a row. An SHB in the
+    * chain is a boundary, and the blocks after it are read in its byte
+    * order. No boundary within one block's reach of the start means no
+    * records.
+    */
+  def walk(buf: Array[Byte], base: Long, end: Long, fileLen: Long,
+           from: SectionMeta): Iterator[PcapRecord] = {
+    val w = new Walk(buf, base, fileLen, from)
+    Iterator.continually(w.step(end)).takeWhile(_ != null).filter(_ ne NoRecord)
+  }
+
+  /** What [[Walk.step]] returns for a block that carries no packet. */
+  private val NoRecord = PcapRecord(0.0, Array.emptyByteArray)
+
+  /** The byte order an SHB at `off` declares; None for a corrupt magic. */
+  private def shbOrder(buf: Array[Byte], off: Int): Option[ByteOrder] =
+    if (off + 12 > buf.length) None
+    else ByteBuffer.wrap(buf, off + 8, 4).order(ByteOrder.BIG_ENDIAN).getInt match {
+      case ByteOrderMagic => Some(ByteOrder.BIG_ENDIAN)
+      case m if Integer.reverseBytes(m) == ByteOrderMagic => Some(ByteOrder.LITTLE_ENDIAN)
+      case _ => None
+    }
+
+  private final class Walk(buf: Array[Byte], base: Long, fileLen: Long, from: SectionMeta) {
+    /** Reads in the current section's byte order. */
+    private val bb = ByteBuffer.wrap(buf)
+      .order(if (from.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+    private val ifaces = ArrayBuffer.from(from.ifaces)
+    private var off: Int =
+      if (base == 0L) 0
+      else (0 until math.min(buf.length, MaxBlock))
+        .find(blockOk(_, PcapFormat.ResyncChain, bb.order)).getOrElse(buf.length)
+
+    def section: SectionMeta = SectionMeta(bb.order == ByteOrder.BIG_ENDIAN, ifaces.toSeq)
+
+    private def u32(o: Int, order: ByteOrder): Long = {
+      val v = bb.getInt(o)
+      (if (order == bb.order) v else Integer.reverseBytes(v)) & 0xffffffffL
+    }
+
+    // The anchor (depth == ResyncChain) must be fully inside the buffer —
+    // length-sandwich verified — else a payload word masquerading as a
+    // huge-but-sane total length would jump past the buffer and
+    // self-certify through the unverifiable-continuation branch. A true
+    // anchor always fits (overhang covers one max block; near EOF the
+    // buffer reaches fileLen, and a link past it is no block).
+    private def blockOk(o: Int, depth: Int, order: ByteOrder): Boolean = {
+      if (base + o >= fileLen) return true // clean EOF
+      val unverifiable = depth < PcapFormat.ResyncChain && base + buf.length < fileLen
+      if (o + FramingLen > buf.length)
+        return unverifiable // ok mid-chain before EOF, never as anchor
+      val ord = if (bb.getInt(o) == ShbType) shbOrder(buf, o).orNull else order
+      if (ord == null) return false
+      val total = u32(o + 4, ord)
+      if (total < FramingLen || total > MaxBlock || total % 4 != 0) return false
+      if (o + total > buf.length) return unverifiable
+      if (u32(o + total.toInt - 4, ord) != total) return false
+      depth <= 1 || blockOk(o + total.toInt, depth - 1, ord)
+    }
+
+    /** Applies the block at the walk's position when its header starts
+      * before file offset `end` and the buffer holds it whole, then moves
+      * past it. Returns the block's record, [[NoRecord]] when it carries
+      * none, or null where the walk stops. */
+    def step(end: Long): PcapRecord = {
+      if (base + off >= end || off + FramingLen > buf.length) return null
+      // SHB first: its type is order-palindromic and it RESETS order
+      val blockType = bb.getInt(off)
+      val ord = if (blockType == ShbType) shbOrder(buf, off).orNull else bb.order
+      if (ord == null) return null // corrupt section header
+      val totalLen = u32(off + 4, ord)
+      if (totalLen < FramingLen || totalLen % 4 != 0 || off + totalLen > buf.length)
+        return null // truncated
+      val bodyStart = off + 8
+      val bodyEnd = off + totalLen.toInt - 4
+      off += totalLen.toInt
+      blockType match {
+        case ShbType =>
+          bb.order(ord)
+          ifaces.clear() // new section, new interface table
+          NoRecord
+        case IdbType if bodyEnd - bodyStart >= 8 =>
+          ifaces += ifaceTsOpts(buf, bb.order, bodyStart + 8, bodyEnd)
+          NoRecord
+        case EpbType if bodyEnd - bodyStart >= 20 =>
+          val ifc = bb.getInt(bodyStart)
+          val ts64 = (bb.getInt(bodyStart + 4).toLong << 32) |
+            (bb.getInt(bodyStart + 8) & 0xffffffffL)
+          val capLen = bb.getInt(bodyStart + 12)
+          if (capLen < 0 || capLen > bodyEnd - bodyStart - 20) NoRecord
+          else PcapRecord(
+            (if (ifc >= 0 && ifc < ifaces.length) ifaces(ifc) else DefaultIfaceTs).toSeconds(ts64),
+            java.util.Arrays.copyOfRange(buf, bodyStart + 20, bodyStart + 20 + capLen))
+        case SpbType if bodyEnd - bodyStart >= 4 =>
+          val cap = math.min(math.max(bb.getInt(bodyStart), 0), bodyEnd - bodyStart - 4)
+          PcapRecord(0.0, java.util.Arrays.copyOfRange(buf, bodyStart + 4, bodyStart + 4 + cap))
+        case _ => NoRecord // unknown types skipped by length
+      }
+    }
   }
 
   /** Serialize records to pcapng bytes — fixtures/tests only, the engine

@@ -22,7 +22,7 @@ object LayoutQ {
     * deletion when the JVM exits, so no session strands it, and returns its
     * path. Hadoop ignores a path that does not exist yet, so this runs
     * after the write; registering again on a later reuse is a no-op. */
-  private def deleteOnExit(spark: org.apache.spark.sql.SparkSession, path: String): String = {
+  private[queries] def deleteOnExit(spark: org.apache.spark.sql.SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
     path

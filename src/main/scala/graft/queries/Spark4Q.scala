@@ -80,7 +80,7 @@ object Spark4Q {
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("price_cents"))
         .write.mode("overwrite").option("rowTag", "order").xml(path)
-      spark.read.option("rowTag", "order").xml(path)
+      spark.read.option("rowTag", "order").xml(LayoutQ.deleteOnExit(spark, path))
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("total_cents"))
         .orderBy("o_orderstatus")

@@ -15,8 +15,8 @@ object Plans extends Subcommand {
     "s_topk" -> "ORDER BY LIMIT k: TakeOrderedAndProject, no global sort",
     "d_lsh_buckets" -> "full-corpus MinHash LSH: one shuffle on (band,sig), no pair explosion",
     "sim_lsh_bucket" -> "ANN candidate pruning: equi-join on LSH bucket replaces the cross product",
-    "pipe_flagship" -> "flagship pcap pipeline: single narrow stage, zero Exchange",
-    "x_local_supplier_volume" -> "TPC-H Q5 shape: dims broadcast, single fact-fact shuffle, date filter pushed",
+    "pipe_flagship" -> "flagship pcap pipeline: scan, decode and range filter in one narrow stage; the only Exchange is the output sort's",
+    "x_local_supplier_volume" -> "TPC-H Q5 shape: every join broadcasts at this sf, lineitem-orders included; the aggregate and output sort are the only shuffles, date filter pushed",
     "x_revenue_forecast" -> "TPC-H Q6 shape: all predicates in PushedFilters, partial+final single-row agg",
     "sub_exists_corr" -> "correlated EXISTS decorrelated to a broadcast left semi join, inner predicate pushed to scan",
     "sub_lateral" -> "lateral ORDER BY LIMIT per group rewritten to window row_number + broadcast join (no nested loop)",
@@ -54,7 +54,7 @@ object Plans extends Subcommand {
     "x_merge_apply" -> "CDC MERGE: latest-per-key via Partial+Final WindowGroupLimit (top-1 map-side before the window shuffle), one full-outer equi-join on the key",
     "g_link_predict" -> "link prediction: pair space from a self-equi-join on the part blocking key (fan-out bounded by suppliers-per-part), degree joins on the bounded node frame",
     "a_winsorized" -> "winsorized totals: daily hash agg is the only full-data pass; rank windows on the calendar-bounded frame, per-flag bounds broadcast back",
-    "x_rank_movers" -> "rank movers: each period collapses to the part grain then TakeOrderedAndProject(50); rank windows and the full-outer join run on 50-row frames",
+    "x_rank_movers" -> "rank movers: each period collapses to the part grain then TakeOrderedAndProject(50), rank windows on 50-row frames; at sf0.01 AQE drops the initial plan's full-outer join and reads one period",
     "q_skew" -> "skew diagnostic: one fact scan to the checkpointed key grain; top-10 via TakeOrdered, global scalars re-aggregate the key grain onto a one-row broadcast",
     "g_scc" -> "SCC assembly: post-closure stages read ONLY checkpointed cohort frames (no FileScan) — the driver fixpoint loop owns the only fact pass via the checkpointed pair grain",
     "x_fulfillment_lag" -> "exact latency percentiles: the orderkey equi-join is the single data-sized stage; cumulative window + threshold aggs run on the domain-bounded (priority, lag) grain",
@@ -75,6 +75,7 @@ object Plans extends Subcommand {
     val sb = new StringBuilder
     sb.append(s"# PLANS — physical plans of headline queries ($sfDir, ${spark.sparkContext.master})\n\n")
     sb.append("Generated by `graft.tools.Probe plans`; regenerate with\n`tools/run_main.sh graft.tools.Probe plans`. What to look for is noted per plan.\n")
+    sb.append("The plans are AQE's final plans; the round evidence under `plans/r17` and `plans/r18` holds AQE's initial plans (`isFinalPlan=false`).\n")
     picks.foreach { case (name, note) =>
       val plan = Plan.finalPlan(spark, sfDir, name)
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
